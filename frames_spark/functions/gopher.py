@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from frames_spark.functions.binding import let as _bind
+
 LINE_WIDTH = 8
 PARA_WIDTH = 32
 
@@ -144,18 +146,6 @@ def dup_fraction_micros(arr: Column) -> Column:
         )
 
     return _bind(arr, with_arr)
-
-
-def _bind(col: Column, f) -> Column:
-    """Let-bind ``col`` once and evaluate ``f(bound)`` — the
-    one-element-array transform, SQL HOFs' only binding construct
-    (the table_buckets precedent). Without it a lambda body that
-    references a subexpression re-evaluates it PER INVOCATION
-    (interpreted HOF eval does no cross-invocation hoisting):
-    measured r15, an unbound sort_array referenced from a filter
-    lambda turned the O(d log d) run-boundary scan into O(d² log d)
-    — minutes instead of sub-second at sf0.1."""
-    return F.element_at(F.transform(F.array(col), f), 1)
 
 
 def _run_starts(s: Column) -> Column:

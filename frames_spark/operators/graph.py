@@ -2,12 +2,11 @@
 graphs the engine builds without self-joins; connected components
 live in dedup/cluster.py).
 
-``cooccur_edges`` / ``degrees`` / ``oriented_wedges`` / ``triangles``
-are the shared wedge machinery behind q_triangle_count,
-q_clustering_coeff, q_degree_dist, q_pagerank and
-q_link_prediction's edge building (r11 verdict: the three copies in
-the query layer were drift risk — pure code motion, plans
-unchanged).
+``cooccur_pairs`` is the one basket-expansion HOF: ``cooccur_edges``
+(q_degree_dist, q_pagerank, q_link_prediction) deduplicates its
+pairs, and ``neighbour_lists`` + ``triangle_probe`` (q_triangle_count,
+q_clustering_coeff) turn them into a triangle plan that caches
+nothing: one probe join over degree-oriented neighbour lists.
 
 ``pagerank`` runs in EXACT INTEGER micros: float PageRank sums
 incoming contributions in partition order, so two runs of the same
@@ -29,13 +28,44 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "cooccur_edges",
+    "cooccur_pairs",
     "degrees",
-    "oriented_edges",
-    "oriented_wedges",
+    "neighbour_lists",
     "pagerank",
-    "triangle_corners",
-    "triangles",
+    "triangle_probe",
 ]
+
+
+def cooccur_pairs(
+    df: DataFrame,
+    group_col: str,
+    item_col: str,
+    u: str = "u",
+    v: str = "v",
+) -> DataFrame:
+    """Undirected co-occurrence pairs ``(u, v)`` with ``u < v`` —
+    items sharing a group become pairwise edges, once per group (an
+    edge shared by k groups appears k times).
+
+    One groupBy + in-array i<j expansion: the fact table NEVER
+    self-joins (a groupwise self-join is |group|^2 shuffle rows; the
+    array expansion emits each ordered pair exactly once inside the
+    aggregated row). collect_set bounds the array by distinct items
+    per group — hub groups are the max_bucket-style cap's concern
+    upstream, not a reducer funnel here, because the expansion is
+    data-parallel per group."""
+    baskets = df.groupBy(group_col).agg(
+        F.array_sort(F.collect_set(item_col)).alias("parts")
+    )
+    return baskets.select(
+        F.explode(
+            F.expr(
+                "flatten(transform(parts, (x, i) -> "
+                "transform(slice(parts, i + 2, size(parts) - i - 1), "
+                f"y -> struct(x AS {u}, y AS {v}))))"
+            )
+        ).alias("e")
+    ).select(f"e.{u}", f"e.{v}")
 
 
 def cooccur_edges(
@@ -46,31 +76,8 @@ def cooccur_edges(
     v: str = "v",
 ) -> DataFrame:
     """Distinct undirected co-occurrence edges ``(u, v)`` with
-    ``u < v`` — items sharing a group become pairwise edges.
-
-    One groupBy + in-array i<j expansion: the fact table NEVER
-    self-joins (a groupwise self-join is |group|^2 shuffle rows
-    before the distinct; the array expansion emits each ordered pair
-    exactly once inside the aggregated row). collect_set bounds the
-    array by distinct items per group — hub groups are the
-    max_bucket-style cap's concern upstream, not a reducer funnel
-    here, because the expansion is data-parallel per group."""
-    baskets = df.groupBy(group_col).agg(
-        F.array_sort(F.collect_set(item_col)).alias("parts")
-    )
-    return (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(parts, (x, i) -> "
-                    "transform(slice(parts, i + 2, size(parts) - i - 1), "
-                    f"y -> struct(x AS {u}, y AS {v}))))"
-                )
-            ).alias("e")
-        )
-        .select(f"e.{u}", f"e.{v}")
-        .distinct()
-    )
+    ``u < v``: ``cooccur_pairs`` deduplicated."""
+    return cooccur_pairs(df, group_col, item_col, u, v).distinct()
 
 
 def degrees(edges: DataFrame, deg_col: str = "deg") -> DataFrame:
@@ -84,82 +91,85 @@ def degrees(edges: DataFrame, deg_col: str = "deg") -> DataFrame:
     )
 
 
-def oriented_edges(edges: DataFrame, deg: DataFrame) -> DataFrame:
-    """Degree-oriented DAG ``(lo, hi)`` over an undirected edge list
-    (Suri & Vassilvitskii, WWW'11): each edge points from its
-    lower-degree endpoint (ties by id), so every out-degree is
-    bounded by ~sqrt(2m) and hub nodes cannot curse a single task in
-    the wedge/triangle consumers."""
-    du = deg.select(F.col("n").alias("u"), F.col("deg").alias("deg_u"))
-    dv = deg.select(F.col("n").alias("v"), F.col("deg").alias("deg_v"))
-    lo_first = (F.col("deg_u") < F.col("deg_v")) | (
-        (F.col("deg_u") == F.col("deg_v")) & (F.col("u") < F.col("v"))
-    )
-    return (
-        edges.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(lo_first, F.col("u")).otherwise(F.col("v")).alias("lo"),
-            F.when(lo_first, F.col("v")).otherwise(F.col("u")).alias("hi"),
+def neighbour_lists(pairs: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
+    """Degree-oriented adjacency ``(n, deg, out)`` of the simple
+    undirected graph behind ``pairs``: ``deg`` is n's degree and
+    ``out`` its out-list N+(n), the neighbours above n in
+    ``(deg, id)`` order (Suri & Vassilvitskii, WWW'11). Every edge
+    sits in exactly one out-list, and every out-list holds at most
+    ~sqrt(2m) ids for m edges, so hub nodes cannot curse a single task
+    in ``triangle_probe``.
+
+    ``pairs`` may repeat an edge, in either direction; self-pairs are
+    dropped. Two groupBys and no join: group the both-direction pairs
+    by n with collect_set (dedups the edges and gives deg(n) as its
+    size), explode to ``(m, n, deg_n)``, and group by m with
+    collect_list(struct(deg_n, n)) — its size is deg(m), and N+(m) is
+    a filter on it. No degree aggregate is joined back to the edges.
+
+    Memory: each aggregate holds ONE node's full neighbour list in a
+    row, linear in the maximum degree — the same class as
+    ``cooccur_pairs``' per-group array. Only the out-lists, bounded by
+    the orientation, reach the probe."""
+    both = pairs.filter(F.col(u) != F.col(v)).select(
+        F.inline(
+            F.array(
+                F.struct(F.col(u).alias("n"), F.col(v).alias("m")),
+                F.struct(F.col(v).alias("n"), F.col(u).alias("m")),
+            )
         )
     )
-
-
-def oriented_wedges(edges: DataFrame, deg: DataFrame) -> DataFrame:
-    """Open wedges ``(p, a, b)`` with ``a < b``, generated at each
-    edge's LOW-degree endpoint: every wedge is opened at its
-    lowest-degree vertex, bounding per-task work by sum(deg^1.5)
-    instead of max(deg^2). ``deg`` is ``degrees(edges)`` (pass it in
-    so consumers that also need degrees share the aggregate)."""
-    oriented = oriented_edges(edges, deg)
-    w1 = oriented.select(F.col("lo").alias("p"), F.col("hi").alias("a"))
-    w2 = oriented.select(F.col("lo").alias("p"), F.col("hi").alias("b"))
-    return w1.join(w2, "p").filter(F.col("a") < F.col("b"))
-
-
-def triangle_corners(oriented: DataFrame) -> DataFrame:
-    """Closed triangles ``(a, b, p)`` from a degree-oriented DAG,
-    each enumerated exactly once (at its lowest-degree corner ``p``).
-
-    Edge-iterator form (r14 opt): for each DAG edge ``(u, v)`` the
-    common OUT-neighbors ``N+(u) ∩ N+(v)`` close one triangle each —
-    u is the triangle's pivot (it points at both v and w). This never
-    materializes the open-wedge relation: the old
-    ``wedges JOIN canon`` form streamed every wedge (sum deg^1.5
-    rows, 41M at sf0.1 vs 1.2M edges) through the closing join, where
-    the adjacency-intersection does O(d_u + d_v) hash work per EDGE
-    row and emits only actual triangles. Per-task memory is two
-    adjacency arrays bounded by the orientation's ~sqrt(2m) cap.
-    Measured at sf0.1: q_triangle_count 7.8s -> ~4s end to end.
-
-    ``oriented`` is consumed three times (probe, both adjacency
-    sides) — callers should persist it (and tie the cache to their
-    result, see operators/caching.py) so the edge lineage executes
-    once."""
-    adj = oriented.groupBy("lo").agg(F.collect_set("hi").alias("nbrs"))
-    probed = oriented.join(
-        adj.select("lo", F.col("nbrs").alias("nu")), "lo"
-    ).join(
-        adj.select(F.col("lo").alias("hi"), F.col("nbrs").alias("nv")), "hi"
+    nbrs = both.groupBy("n").agg(F.collect_set("m").alias("nbrs"))
+    tagged = nbrs.select(
+        F.explode("nbrs").alias("m"), "n", F.size("nbrs").alias("deg_n")
     )
-    return probed.select(
-        F.col("lo").alias("p"),
-        F.col("hi").alias("x"),
-        F.explode(F.array_intersect("nu", "nv")).alias("y"),
-    ).select(
-        F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b"), "p"
+    adj = (
+        tagged.groupBy("m")
+        .agg(F.collect_list(F.struct("deg_n", "n")).alias("nb"))
+        .select(F.col("m").alias("n"), F.size("nb").alias("deg"), "nb")
+    )
+
+    def above(s):
+        return (s["deg_n"] > F.col("deg")) | (
+            (s["deg_n"] == F.col("deg")) & (s["n"] > F.col("n"))
+        )
+
+    return adj.select(
+        "n", "deg", F.transform(F.filter("nb", above), lambda s: s["n"]).alias("out")
     )
 
 
-def triangles(edges: DataFrame, deg: DataFrame | None = None) -> DataFrame:
-    """Closed triangles ``(a, b, p)``, each enumerated exactly once
-    (at its lowest-degree corner) — un-cached composition of
-    ``oriented_edges`` + ``triangle_corners``. Query paths persist
-    the oriented DAG themselves and tie its lifetime to their result
-    (the oriented relation feeds three plan legs)."""
-    if deg is None:
-        deg = degrees(edges)
-    return triangle_corners(oriented_edges(edges, deg))
+def triangle_probe(adj: DataFrame) -> DataFrame:
+    """``(lo, hi, lo_deg, hi_deg, common)`` for every oriented edge
+    lo -> hi of ``neighbour_lists`` output, with
+    ``common = N+(lo) ∩ N+(hi)``: each w in it closes the triangle
+    {lo, hi, w}, and every triangle appears exactly once (lo its
+    lowest corner in (deg, id) order, hi the middle one).
+    ``sum(size(common))`` is the triangle count. Every edge is one
+    row, so every node of degree >= 1 appears as lo or hi, with its
+    degree: per-node consumers need no degree join.
+
+    One join: explode N+(lo) to ``(lo, hi, nu)`` and join the same
+    adjacency on hi. The intersection does O(|nu| + |nv|) hash work
+    per edge and never materializes the open wedges. The join is
+    pinned to a shuffled hash join that builds the ADJACENCY side:
+    it is already hash-partitioned on its node by the groupBy, and
+    neither side may be broadcast — both carry arrays, and AQE
+    broadcasting the exploded side ran a 4g driver out of memory at
+    sf0.1. Only out-lists (<= ~sqrt(2m) ids each) enter the
+    intersection, so per-row work keeps the orientation's bound."""
+    probe = adj.select(
+        F.col("n").alias("lo"),
+        F.col("deg").alias("lo_deg"),
+        F.explode("out").alias("hi"),
+        F.col("out").alias("nu"),
+    )
+    build = adj.select(
+        F.col("n").alias("hi"), F.col("deg").alias("hi_deg"), F.col("out").alias("nv")
+    )
+    return probe.join(build.hint("shuffle_hash"), "hi").select(
+        "lo", "hi", "lo_deg", "hi_deg", F.array_intersect("nu", "nv").alias("common")
+    )
 
 
 def pagerank(

@@ -320,9 +320,9 @@ def q_join_cardinality_est(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Triangle count on the co-purchase graph (parts co-occurring in an
 # order). The naive open-wedge join explodes on hub nodes — "the
 # curse of the last reducer" — so edges are oriented LOW-DEGREE ->
-# HIGH-DEGREE first (Suri & Vassilvitskii, WWW'11): every wedge is
-# generated at its lowest-degree vertex, bounding per-task work by
-# sum(deg^1.5) instead of max(deg^2). Edge building itself is the
+# HIGH-DEGREE first (Suri & Vassilvitskii, WWW'11): every triangle is
+# closed at its lowest-degree vertex by intersecting out-lists of at
+# most ~sqrt(2m) ids (operators/graph.py). Edge building itself is the
 # bucketed in-order pair expansion (one groupBy, i<j inside the
 # array — the order table never self-joins). The count is
 # orientation-invariant, so the oracle uses the simple i<j
@@ -345,25 +345,21 @@ def q_join_cardinality_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from frames_spark.operators.caching import tie_cache
     from frames_spark.operators.graph import (
-        cooccur_edges,
-        degrees,
-        oriented_edges,
-        triangle_corners,
+        cooccur_pairs,
+        neighbour_lists,
+        triangle_probe,
     )
 
     li = load_table(spark, sf_dir, "lineitem")
-    # Edge list and oriented DAG persisted: edges feed the degree
-    # union twice + the orientation, and the DAG feeds three legs of
-    # the adjacency-intersection (see triangle_corners). Both are
-    # O(m) two-long-column relations; the caches die with the result.
-    edges = cooccur_edges(li, "l_orderkey", "l_partkey").persist()
-    oriented = oriented_edges(edges, degrees(edges)).persist()
-    res = triangle_corners(oriented).agg(
-        F.count(F.lit(1)).alias("n_triangles")
+    # One uncached plan: the adjacency's shuffle feeds both probe
+    # sides through exchange reuse (see triangle_probe).
+    adj = neighbour_lists(cooccur_pairs(li, "l_orderkey", "l_partkey"))
+    return triangle_probe(adj).agg(
+        F.coalesce(F.sum(F.size("common")), F.lit(0))
+        .cast("long")
+        .alias("n_triangles")
     )
-    return tie_cache(res, edges, oriented)
 
 
 # Equal-frequency feature binning (10 bins over order price) — the

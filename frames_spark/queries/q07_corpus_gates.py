@@ -1900,9 +1900,9 @@ def q_simhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Per-node clustering coefficient on the co-purchase graph: the
 # local triangle density 2T(v) / deg(v)(deg(v)-1) (Watts-Strogatz) —
 # the node-level refinement of q_triangle_count, sharing its
-# degree-oriented wedge machinery (Suri & Vassilvitskii, WWW'11):
+# degree-oriented neighbour-list probe (Suri & Vassilvitskii, WWW'11):
 # each triangle is still enumerated once at its lowest-degree
-# vertex, then credited to all three corners with one explode.
+# vertex, then credited to all three corners with one posexplode.
 # Coefficients are exact integer micros; the node dimension is
 # bounded by |part|, so the output relation is dimension-sized.
 # ---------------------------------------------------------------------------
@@ -1941,42 +1941,45 @@ def q_simhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from frames_spark.operators.caching import tie_cache
     from frames_spark.operators.graph import (
-        cooccur_edges,
-        degrees,
-        oriented_edges,
-        triangle_corners,
+        cooccur_pairs,
+        neighbour_lists,
+        triangle_probe,
     )
 
     li = load_table(spark, sf_dir, "lineitem")
-    # Same staging as q_triangle_count: edges feed degrees (union x2)
-    # + orientation + the final degree join; the oriented DAG feeds
-    # three legs of the adjacency-intersection. Caches tied to the
-    # returned result's lifetime.
-    edges = cooccur_edges(li, "l_orderkey", "l_partkey").persist()
-    deg = degrees(edges)
-    oriented = oriented_edges(edges, deg).persist()
-    tri_nodes = (
-        triangle_corners(oriented)
-        .select(F.explode(F.array("p", "a", "b")).alias("n"))
+    adj = neighbour_lists(cooccur_pairs(li, "l_orderkey", "l_partkey"))
+    # A probe row closes size(common) triangles at lo and at hi, and
+    # one at each w in common. Every node of degree >= 1 is the lo or
+    # hi of some probe row, which carries its degree: no degree join.
+    return (
+        triangle_probe(adj)
+        .select(
+            F.posexplode(F.concat(F.array("lo", "hi"), "common")).alias("pos", "n"),
+            F.size("common").alias("k"),
+            "lo_deg",
+            "hi_deg",
+        )
         .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("t"))
-    )
-    res = (
-        deg.filter(F.col("deg") >= 2)
-        .join(tri_nodes, "n", "left")
+        .agg(
+            F.sum(F.when(F.col("pos") < 2, F.col("k")).otherwise(1)).alias("t"),
+            F.max(
+                F.when(F.col("pos") == 0, F.col("lo_deg")).when(
+                    F.col("pos") == 1, F.col("hi_deg")
+                )
+            ).alias("deg"),
+        )
+        .filter(F.col("deg") >= 2)
         .select(
             F.col("n").alias("node"),
             F.col("deg").cast("long").alias("degree"),
-            F.coalesce(F.col("t"), F.lit(0)).cast("long").alias("n_triangles"),
+            F.col("t").cast("long").alias("n_triangles"),
             F.expr(
-                "CAST((4 * COALESCE(t, 0) * 1000000 + deg * (deg - 1))"
+                "CAST((4 * t * 1000000 + deg * (deg - 1))"
                 " DIV (2 * deg * (deg - 1)) AS BIGINT)"
             ).alias("clustering_micros"),
         )
     )
-    return tie_cache(res, edges, oriented)
 
 
 # ---------------------------------------------------------------------------

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from frames_spark.sources.tables import parquet_schema
+
 # Logical event schema after ts normalization; the PHYSICAL schema is
 # probed from the parquet footer at read time (the writer has shipped
 # both TIMESTAMP(NANOS)->bigint and TIMESTAMP(MICROS,ntz) shapes).
@@ -34,13 +36,15 @@ EVENT_SCHEMA = T.StructType(
 
 
 def probe_event_schema(spark: SparkSession, path: str) -> T.StructType:
-    """Physical schema of an events parquet file/dir via a zero-cost
-    batch read (footer only, no scan). File-stream sources require a
+    """Physical schema of an events parquet file/dir, inferred from the
+    parquet footer. The first probe of a file runs one Spark job (the
+    footer read); later probes of the unchanged file reuse it through
+    sources.tables.parquet_schema. File-stream sources require a
     declared schema; probing beats hard-coding the writer's current
     timestamp encoding, which has already shipped in two shapes."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(path).schema
+    return parquet_schema(spark, path)
 
 
 def normalize_ts(df: DataFrame, physical: T.StructType) -> DataFrame:

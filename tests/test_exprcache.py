@@ -2,7 +2,7 @@
 copy-on-return, and gateway-generation invalidation — plus direct
 equivalence tests for the r14-optimized fragment builders that are
 otherwise covered only through query/oracle tests (table_buckets vs
-the legacy slice form, triangle_corners vs brute force,
+the legacy slice form, triangle_probe vs brute force,
 simhash_from_index vs the corpus path)."""
 
 from __future__ import annotations
@@ -125,12 +125,16 @@ def test_table_buckets_matches_legacy_slice_form(spark):
 
 
 def test_triangle_corners_matches_bruteforce(spark):
-    """triangle_corners over the degree-oriented DAG must enumerate
-    exactly the brute-force triangle set, once each."""
-    from frames_spark.operators.graph import degrees, oriented_edges, triangle_corners
+    """triangle_probe over degree-oriented neighbour lists must
+    enumerate exactly the brute-force triangle set, once each — also
+    with a star hub whose degree exceeds every other node's (its id
+    is the smallest, so only the degree orientation keeps it last)."""
+    from frames_spark.operators.graph import neighbour_lists, triangle_probe
 
     # deterministic pseudo-random graph on 30 nodes + a planted clique
+    # (also listed reversed) + a hub joined to every node; pairs repeat
     n = 30
+    hub = -1
     edges = (
         spark.range(200)
         .select(
@@ -141,27 +145,35 @@ def test_triangle_corners_matches_bruteforce(spark):
         .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
         .union(
             spark.createDataFrame(
-                [(a, b) for a in range(5) for b in range(a + 1, 5)], "u long, v long"
+                [(a, b) for a in range(5) for b in range(a + 1, 5)]
+                + [(b, a) for a in range(5) for b in range(a + 1, 5)]
+                + [(hub, b) for b in range(n)],
+                "u long, v long",
             )
         )
-        .distinct()
     )
-    tri = triangle_corners(oriented_edges(edges, degrees(edges)))
+    adj = neighbour_lists(edges)
+    degs = {r["n"]: r["deg"] for r in adj.collect()}
+    assert all(d < degs[hub] for node, d in degs.items() if node != hub)
+    tri = triangle_probe(adj).select(
+        F.col("lo").alias("p"), F.col("hi").alias("a"), F.explode("common").alias("b")
+    )
     got_list = [
         tuple(sorted((r["a"], r["b"], r["p"]))) for r in tri.collect()
     ]
     got = set(got_list)
     assert len(got_list) == len(got), "triangle emitted twice"
-    es = {(r["u"], r["v"]) for r in edges.collect()}
-    adj: dict[int, set[int]] = {}
+    es = {(min(r["u"], r["v"]), max(r["u"], r["v"])) for r in edges.collect()}
+    adj_sets: dict[int, set[int]] = {}
     for u, v in es:
-        adj.setdefault(u, set()).add(v)
-        adj.setdefault(v, set()).add(u)
+        adj_sets.setdefault(u, set()).add(v)
+        adj_sets.setdefault(v, set()).add(u)
+    assert degs == {node: len(ns) for node, ns in adj_sets.items()}
     want = {
         (a, b, c)
-        for a in adj
-        for b in adj[a] if b > a
-        for c in adj[b] if c > b and c in adj[a]
+        for a in adj_sets
+        for b in adj_sets[a] if b > a
+        for c in adj_sets[b] if c > b and c in adj_sets[a]
     }
     assert got == want and len(want) >= 10
 

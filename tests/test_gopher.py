@@ -202,3 +202,26 @@ def test_extended_gate_drops_symbol_spam(spark):
         )
     )
     assert [r.doc_id for r in kept.collect()] == [1]
+
+
+def test_run_starts_single_run_under_ansi(spark):
+    """``_run_starts`` reads element i-1 only when i > 1: ANSI
+    element_at raises on index 0, so the ``i == 1`` disjunct must
+    short-circuit on a one-gram array and on an all-equal one."""
+    from frames_spark.functions.gopher import _run_starts
+
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        df = spark.createDataFrame(
+            [(1, ["a"]), (2, ["x", "x", "x", "x"])], "id int, s array<string>"
+        )
+        rows = df.select(
+            "id",
+            _run_starts(F.col("s")).alias("starts"),
+            top_gram(F.col("s")).alias("top"),
+        ).orderBy("id").collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert [r.starts for r in rows] == [[1], [1]]
+    assert [(r.top.cnt, r.top.gram) for r in rows] == [(1, "a"), (4, "x")]

@@ -114,3 +114,36 @@ def test_star_joins_broadcast_dims(spark, sf_dir, name):
     assert "BroadcastHashJoin" in plan, f"{name} lost its dim broadcasts"
     # the fact table must never sort-merge against a dimension
     assert plan.count("SortMergeJoin") <= 1, f"{name} shuffles its dims"
+
+
+# The triangle probe carries neighbour arrays on both join sides: a
+# broadcast of either side (AQE demotes small shuffle joins at
+# runtime) ran a 4g driver out of memory at sf0.1, so the probe is
+# pinned to a shuffled hash join. And the plan caches nothing: the
+# adjacency's shuffle is shared through exchange reuse instead.
+@pytest.mark.parametrize("name", ["q_triangle_count", "q_clustering_coeff"])
+def test_triangle_probe_never_broadcasts_arrays(spark, sf_dir, name):
+    from frames_spark.plans.advisor import _node_depth
+
+    df = QUERIES[name](spark, sf_dir)
+    df.collect()
+    # executed plan: the AQE final plan once the frame has run
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    assert not any(
+        "InMemoryRelation" in ln or "InMemoryTableScan" in ln for ln in lines
+    ), f"{name} caches a relation"
+    for i, line in enumerate(lines):
+        if "BroadcastExchange" not in line:
+            continue
+        depth = _node_depth(line)
+        stage_cut = None
+        for child in lines[i + 1 :]:
+            d = _node_depth(child)
+            if d <= depth:
+                break
+            if stage_cut is not None and d > stage_cut:
+                continue
+            stage_cut = d if "QueryStage" in child or "Exchange" in child else None
+            assert "Generate" not in child, (
+                f"{name} broadcasts a side that explodes an array:\n{line}\n{child}"
+            )

@@ -68,6 +68,25 @@ def _copy(val: Any) -> Any:
     return val
 
 
+def _check_flat(tag: str, val: Any) -> None:
+    """Reject a container that holds another container: ``_copy`` is
+    shallow, so the inner one would alias the cached instance and a
+    caller mutating it would poison the cache."""
+    if isinstance(val, dict):
+        items = val.values()
+    elif isinstance(val, list):
+        items = val
+    else:
+        return
+    for item in items:
+        if isinstance(item, (dict, list, tuple, set)):
+            raise TypeError(
+                f"memo_col({tag!r}): built value is a {type(val).__name__} "
+                f"holding a {type(item).__name__}; only flat containers of "
+                "Columns and scalars can be cached"
+            )
+
+
 def memo_col(tag: str, key_parts: tuple, build: Callable[[], Any]) -> Any:
     """Return ``build()`` memoized on ``(tag, *key_parts)`` for the
     lifetime of the current py4j gateway.
@@ -88,8 +107,10 @@ def memo_col(tag: str, key_parts: tuple, build: Callable[[], Any]) -> Any:
 
     The built value may be a Column or a flat dict/list of Columns;
     containers are returned as shallow copies so callers can't mutate
-    the cached instance. A new py4j gateway (restarted JVM) clears
-    the cache — cached handles are bound to the old JVM."""
+    the cached instance, and a container holding another container
+    raises TypeError before it is cached. A new py4j gateway
+    (restarted JVM) clears the cache — cached handles are bound to the
+    old JVM."""
     global _CACHE_GATEWAY
     gw = _gateway()
     if gw is not _CACHE_GATEWAY:
@@ -100,5 +121,6 @@ def memo_col(tag: str, key_parts: tuple, build: Callable[[], Any]) -> Any:
         return _copy(_CACHE[key])
     except KeyError:
         val = build()
+        _check_flat(tag, val)
         _CACHE[key] = val
         return _copy(val)

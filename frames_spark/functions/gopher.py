@@ -212,7 +212,10 @@ def top_gram_char_frac_micros(
     toks: Column, n: int, total_chars: Column
 ) -> Column:
     """Characters covered by the most frequent n-gram / total chars,
-    micros-quantized (0 when the doc has no n-grams).
+    micros-quantized. 0 when the doc has no n-grams, and 0 (not NULL)
+    when ``total_chars`` is NULL or <= 0: the guard
+    ``(size > 0) & (total_chars > 0)`` is NULL there, so ``when`` takes
+    the ``otherwise`` branch (tests/test_gopher.py pins this).
 
     The ENTIRE computation lives inside one binding chain (r15):
     a column expression referenced k times is COPIED k times into the

@@ -63,6 +63,13 @@ def nb_fit(train_db: DataFrame, n_buckets: int = 4096):
       ln((n_cb + 1) / (n_c + B)), observed buckets only.
     * class_stats: (_label, def_nanos, prior_nanos) — the unseen-
       bucket default ln(1 / (n_c + B)) and the doc-frequency prior.
+
+    PRECONDITION: every ``_id`` carries exactly one ``_label``, as
+    :func:`doc_buckets` guarantees (it copies each document row's
+    label). The prior's denominator is the sum of the per-label
+    distinct-document counts, so an ``_id`` under two labels is
+    counted twice there. Not checked: a check would cost an extra
+    corpus-scale job per fit.
     """
     b = F.lit(float(n_buckets))
     ncb = train_db.groupBy("_label", "bucket").agg(F.sum("c").alias("ncb"))

@@ -9,7 +9,7 @@ interactive `.explain`-driven tuning.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -67,6 +67,20 @@ def whole_stage_codegen_spans(df: DataFrame) -> int:
         if tok.isdigit():
             return int(tok)
     return 0
+
+
+def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled, compile milliseconds) so far in the driver
+    JVM: every Janino compile, i.e. every codegen cache miss, since the
+    JVM started. Take it before and after a workload and subtract. In
+    local mode the executors share the driver's JVM and its cache, so
+    their compiles count too; on a cluster each executor compiles into
+    its own JVM, which this does not see."""
+    jvm = spark.sparkContext._jvm  # noqa: SLF001
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(n), ns / 1e6
+
 
 def n_parquet_scans(df: DataFrame) -> int:
     """Distinct parquet-scan NODES in the plan (the formatted string

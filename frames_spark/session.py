@@ -74,6 +74,25 @@ def get_spark(
         # Parquet TIMESTAMP(NANOS) has no Spark type; read as epoch-nanos
         # long and convert in the loader (sources/tables.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Janino compiles generated classes into one JVM-wide LRU cache,
+        # 100 classes by default. One pass over bench.py's 99 keys
+        # compiles 1,451 distinct classes (sf0.01, local[4], with the
+        # class-name setting below) and a pass over perfbench's olap and
+        # curation operations 115 + 159, so the default evicted every
+        # class before its next use and each timed perfbench pass
+        # recompiled all 274. 4096 holds the registered-query working
+        # set with ~2.8x headroom. A static conf: it takes effect only
+        # when this call creates the JVM's first session; later
+        # sessions share that cache.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # The codegen stage id is part of the generated source, hence of
+        # the cache key, and AQE numbers stages in the order they
+        # materialize, which differs between runs of one query. With
+        # ids kept and a 4096-entry cache, a second pass over the 99
+        # keys still recompiled 114 classes and the first compiled
+        # 1,727; without ids, 6 and 1,451. Plans and results do not
+        # change, only which compiled class is reused.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )

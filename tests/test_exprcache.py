@@ -61,6 +61,23 @@ def test_memo_col_container_results_are_copies(spark):
     assert len(l2) == 2
 
 
+@pytest.mark.parametrize(
+    "nested",
+    [
+        lambda: {"a": F.lit(1), "b": [F.lit(2)]},
+        lambda: [F.lit(1), {"b": F.lit(2)}],
+        lambda: [(F.lit(1), F.lit(2))],
+    ],
+    ids=["dict_of_list", "list_of_dict", "list_of_tuple"],
+)
+def test_memo_col_rejects_nested_containers(spark, nested):
+    """The copy on return is shallow, so a nested container would
+    alias the cached one: it is refused before it is cached."""
+    with pytest.raises(TypeError, match="t.nested"):
+        memo_col("t.nested", (), nested)
+    assert not exprcache._CACHE
+
+
 def test_memo_col_new_gateway_clears_cache(spark, monkeypatch):
     """A new py4j gateway (restarted JVM) must invalidate every
     cached Column handle — they are bound to the old JVM."""

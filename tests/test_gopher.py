@@ -19,6 +19,7 @@ from frames_spark.functions.gopher import (
     symbol_word_ratio_micros,
     token_windows,
     top_gram,
+    top_gram_char_frac_micros,
 )
 from frames_spark.functions.text import normalize, tokens
 
@@ -225,3 +226,22 @@ def test_run_starts_single_run_under_ansi(spark):
         spark.conf.set("spark.sql.ansi.enabled", prev)
     assert [r.starts for r in rows] == [[1], [1]]
     assert [(r.top.cnt, r.top.gram) for r in rows] == [(1, "a"), (4, "x")]
+
+
+def test_top_gram_char_frac_null_total_chars_is_zero(spark):
+    """NULL ``total_chars`` gives 0, not NULL, like 0 total chars and
+    a doc with no n-grams; a normal doc gives the exact micros."""
+    df = spark.createDataFrame(
+        [
+            (1, ["a", "b", "a", "b"], None),
+            (2, ["a", "b", "a", "b"], 0),
+            (3, ["a"], 10),
+            (4, ["a", "b", "a", "b"], 8),
+        ],
+        "id int, t array<string>, tc long",
+    )
+    rows = df.select(
+        "id", top_gram_char_frac_micros(F.col("t"), 2, F.col("tc")).alias("f")
+    ).orderBy("id").collect()
+    # doc 4: 2-grams [a b, b a, a b]; "a b" twice covers 2 * 3 chars of 8
+    assert [r.f for r in rows] == [0, 0, 0, 750_000]

@@ -33,8 +33,8 @@ shuffle): duplicate positions are collected per doc (bounded by the
 doc's own token count) and tokens are filtered with a JVM
 higher-order function.
 
-The q_boilerplate operator (queries.py) is the DETECTION counterpart
-of this module's removal.
+The q_boilerplate operator (queries/q03_text_quality.py) is the
+DETECTION counterpart of this module's removal.
 
 Frames ref: no equivalent (beyond the reference's surface — LLM
 pipeline extension, SURVEY.md §2b).

@@ -4,7 +4,7 @@ no Python UDFs in these hot paths).
 These are the scale extensions of SURVEY.md §2b: quality scoring,
 token counting, language-ID scoring, fingerprinting. Every function
 is expressible in portable SQL so the DuckDB oracle can replicate it
-exactly (the queries in frames_spark/queries.py carry the SQL twins).
+exactly (the queries in frames_spark/queries/ carry the SQL twins).
 """
 
 from __future__ import annotations

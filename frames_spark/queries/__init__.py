@@ -1,40 +1,39 @@
 """Query registry package: SURVEY.md §2 key -> (spark, sf_dir) ->
 DataFrame, plus the DuckDB oracle SQL for each key.
 
-Split into nine parts (~2.3k lines each) (r8; the single module had grown to
-~18k lines). Parts chain lexically — q09 imports q08 imports ... q01 —
-so importing the LAST part executes every ``@register`` in the
-original source order; the externally-visible registration order is
-then fixed by the literal manifest (frames_spark/registry_order.py),
-NOT import side-effect order. Every name the old module exported
-(QUERIES, ORACLES, q_* callables, _-prefixed test helpers) is
-re-exported here, so ``from frames_spark.queries import X`` is
-unchanged for every existing importer.
+Registration order is load-bearing: the external driver value-checks
+only the FIRST 50 keys of ``queries()`` (tests/test_driver_window.py
+pins that window's composition). The order is module order, q01
+through q09 as imported below, then source order within each module.
+Adding a query is one ``@register`` at the place it should sit.
+
+Each q-module imports every name it uses: shared query helpers come
+from the q-module that defines them. ``queries.q_foo`` (and ``from
+frames_spark.queries import q_foo``) resolves to the registered
+callable of key ``q_foo``; private helpers are imported from their
+defining module.
 """
 
 from __future__ import annotations
 
-import frames_spark.queries.q09_privacy as _last
-
-globals().update(
-    {k: v for k, v in vars(_last).items() if not k.startswith("__")}
+from frames_spark.queries import (  # noqa: F401  (import = registration)
+    q01_core_ops,
+    q02_analytics,
+    q03_text_quality,
+    q04_skew_stats,
+    q05_stats_matrix,
+    q06_eval_ml,
+    q07_corpus_gates,
+    q08_sketch_select,
+    q09_privacy,
 )
-del _last
+from frames_spark.queries.q01_core_ops import ORACLES, QUERIES, q1_bench
 
-from frames_spark.registry_order import REGISTRATION_ORDER as _ORDER  # noqa: E402
-
-
-def _apply_manifest() -> None:
-    got, want = set(QUERIES), set(_ORDER)  # noqa: F821
-    if got != want:
-        missing = sorted(want - got)
-        unlisted = sorted(got - want)
-        raise RuntimeError(
-            f"registration manifest drift: missing={missing} unlisted={unlisted}"
-        )
-    ordered = {name: QUERIES[name] for name in _ORDER}  # noqa: F821
-    QUERIES.clear()  # noqa: F821
-    QUERIES.update(ordered)  # noqa: F821
+__all__ = ["ORACLES", "QUERIES", "q1_bench"]
 
 
-_apply_manifest()
+def __getattr__(name: str):
+    try:
+        return QUERIES[name]
+    except KeyError:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}") from None

@@ -1,5 +1,7 @@
-"""Query registry: SURVEY.md §2 key -> (spark, sf_dir) -> DataFrame,
-plus the DuckDB oracle SQL for each key.
+"""q01_core_ops — query registry, module 1 of 9: ``register``, the
+QUERIES/ORACLES dicts, the shared SQL-fragment and corpus helpers the
+later modules import, and the Frames-parity core (folds, joins,
+reshapes, windows, dedup, ANN) that fills the driver's 50-key window.
 
 Cross-engine determinism: double-typed aggregates are computed over
 exact DECIMAL casts (order-independent), then cast back to DOUBLE —
@@ -30,6 +32,8 @@ ORACLES: dict[str, str] = {}
 
 def register(name: str, oracle: str | None = None):
     def deco(fn):
+        if name in QUERIES:
+            raise ValueError(f"query key {name!r} is already registered")
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
@@ -923,48 +927,9 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("fp", "canonical_id", "n_copies")
 
 
-# N-gram Jaccard near-dup pairs via shingle inverted index, with the
-# default stop-shingle guard mirrored in the oracle's `rare` CTE.
-@register(
-    "q_dedup_ngram",
-    f"""
-    WITH corpus AS ({_NEAR_CORPUS_SQL}),
-    shingled0 AS ({_SHINGLES_SQL.format(tokens=_TOKENS_SQL, corpus="SELECT * FROM corpus")}),
-    rare AS (
-      SELECT shingle FROM shingled0 GROUP BY shingle
-      HAVING COUNT(*) <= {_SHINGLE_MAX_DF}
-    ),
-    shingled AS (SELECT s.* FROM shingled0 s JOIN rare USING (shingle)),
-    sizes AS (SELECT doc, COUNT(*) AS n_shingles FROM shingled GROUP BY doc),
-    inter AS (
-      SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_common
-      FROM shingled a JOIN shingled b ON a.shingle = b.shingle AND a.doc < b.doc
-      GROUP BY 1, 2
-    )
-    SELECT doc_a, doc_b,
-           CAST(n_common AS DOUBLE)
-             / CAST(sa.n_shingles + sb.n_shingles - n_common AS DOUBLE) AS jaccard
-    FROM inter
-    JOIN sizes sa ON doc_a = sa.doc
-    JOIN sizes sb ON doc_b = sb.doc
-    WHERE CAST(n_common AS DOUBLE)
-          / CAST(sa.n_shingles + sb.n_shingles - n_common AS DOUBLE) >= 0.6
-    """,
-)
-def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    # Explicit pin (the library default is now "auto"): this oracle's
-    # rare CTE hardcodes df <= _SHINGLE_MAX_DF, so the Spark side must
-    # pin the same cap. The governed twin is q_dedup_ngram_auto.
-    return jac_ops.jaccard_pairs(
-        _with_near_copies(docs), "doc_id", "text", n=3, threshold=0.6,
-        max_df=_SHINGLE_MAX_DF, guard="off",
-    )
-
-
-# The GOVERNED twin: max_df="auto" derives the stop-shingle cap from
-# a one-aggregate corpus-size pre-flight (suggest_max_df — boilerplate
-# is a rate, not a count; the r12 sf1 sweep showed the fixed df<=64
+# The GOVERNED twin of q_dedup_ngram (further down): max_df="auto"
+# derives the stop-shingle cap from a one-aggregate corpus-size
+# pre-flight (suggest_max_df — boilerplate is a rate, not a count; the r12 sf1 sweep showed the fixed df<=64
 # cap stops every shingle at 10x and silently empties the pair set).
 # The oracle mirrors the governor exactly, interpolating the SAME
 # constants suggest_max_df defaults to (DEFAULT_MAX_DF floor +
@@ -1214,6 +1179,66 @@ def _gov_np_sql(count_sql: str, max_bucket: int, headroom: int) -> str:
     )"""
 
 
+# Embedding-miner geometry: planes per table, tables, bucket cap and
+# top-k of the hard-negative / triplet miners (q_hard_negatives_auto
+# below; the pinned miners and q_triplet_mining_auto in q09_privacy).
+_HN_PLANES = 4
+_HN_TABLES = 8
+_HN_MAXB = 4000
+_HN_K = 3
+
+
+# ---------------------------------------------------------------------------
+# GOVERNED-GEOMETRY miner twins (r12 verdict #2): num_planes derived from a
+# one-aggregate corpus-size pre-flight via suggest_num_planes instead
+# of the pinned _HN_PLANES — the sf1 evidence showed the pinned 4-plane
+# geometry is the suite's one super-linear scaler (bucket sizes grow
+# linearly with the corpus under a fixed plane count; the governor
+# holds expected bucket size at max_bucket/4). The oracle replays the
+# governor IN SQL over the same corpus count (the q_dedup_ngram_auto
+# gov-CTE pattern), interpolating the SAME constants the library
+# defaults to (DEFAULT_MIN/MAX_PLANES), so the derived plane count is
+# value-certified cross-engine at whatever SF the sweep runs: at the
+# 500/2000-vector tiers the governor sits at the 4-plane floor (same
+# result set as the pinned twins), at sf1's 20k vectors it derives 5.
+# ---------------------------------------------------------------------------
+
+# VALUES plane-table headroom: 12 planes/table covers corpora to ~2M
+# vectors (np > 12 needs n >> 11 > max_bucket/4). Past that the gov
+# CTE raises via error() instead of silently banding with truncated
+# plane rows.
+_HN_ORACLE_MAX_PLANES = 12
+
+
+def _gov_banded_ctes() -> str:
+    """The governed banding CTE prefix shared by the *_auto miner
+    oracles: gov replays suggest_num_planes via the shared
+    _gov_np_sql builder over COUNT(*) of the same
+    corpus the Spark side pre-flights; signs/banded use only the
+    first np planes per table out of the 12-plane VALUES headroom."""
+    return f"""
+    fixed AS ({_FIXED_SQL.format(corpus="SELECT vec_id, embedding FROM embeddings")}),
+    lab AS (SELECT vec_id, label FROM embeddings),
+    gov AS {_gov_np_sql("SELECT COUNT(*) FROM embeddings", _HN_MAXB, _HN_ORACLE_MAX_PLANES)},
+    planes(p, i, c) AS (VALUES {_lsh_planes_values(_HN_TABLES * _HN_ORACLE_MAX_PLANES)}),
+    signs AS (
+      SELECT vec_id, p,
+             CASE WHEN SUM(e * c) >= 0 THEN '1' ELSE '0' END AS sign
+      FROM fixed JOIN planes USING (i)
+      WHERE p < {_HN_TABLES} * (SELECT np FROM gov)
+      GROUP BY vec_id, p
+    ),
+    banded AS (
+      SELECT vec_id, p // (SELECT np FROM gov) AS tbl,
+             string_agg(sign, '' ORDER BY p) AS bucket
+      FROM signs GROUP BY vec_id, p // (SELECT np FROM gov)
+    ),
+    ok_buckets AS (
+      SELECT tbl, bucket FROM banded
+      GROUP BY tbl, bucket HAVING COUNT(*) BETWEEN 2 AND {_HN_MAXB}
+    )"""
+
+
 def _emb_lsh_oracle(
     num_planes: int, num_tables: int, max_bucket: int, corpus_sql: str
 ) -> str:
@@ -1265,94 +1290,59 @@ def _emb_lsh_oracle(
 """
 
 
-@register("q_dedup_embed", _emb_lsh_oracle(4, 16, 4000, _EMB_CORPUS_SQL))
-def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # BUCKETED path: hyperplane-LSH candidates, exact fixed-point
-    # cosine inside buckets; the O(n^2) all-pairs form never appears
-    # in an execution plan. Short 4-plane bands x 16 tables: per-band
-    # collision at the 0.9 threshold is (1 - acos(0.9)/pi)^4 ~ 0.54,
-    # so 16 independent bands give ~0.99999 per-pair recall at the
-    # decision boundary (and ~1.0 for the near-identical copies dedup
-    # actually targets). The oracle models THIS candidate generation
-    # bit-for-bit (see _emb_lsh_oracle), so the gate cannot flake on
-    # a boundary miss after a data regeneration; recall vs the exact
-    # all-pairs semantics is measured by q_embed_lsh_recall.
-    emb = load_table(spark, sf_dir, "embeddings")
-    return embed_ops.near_dup_pairs_lsh(
-        _with_perturbed_copies(emb), "vec_id", "embedding",
-        threshold=0.9, num_planes=4, num_tables=16, max_bucket=4000,
-        guard="off",
-    )
-
-
-# Governed-geometry twin of q_dedup_embed (r13 — completing the
-# suggest_num_planes story across all three LSH families beside
-# q_dedup_ngram_auto and the *_auto miners): num_planes derived from
-# the perturbed-corpus count against max_bucket=400 (target bucket
-# 100), so the geometry diverges from the 4-plane floor ALREADY at
-# sf0.1 (4000 rows -> 6 planes; sf1's 40000 -> 9) and the sweep
-# certifies the derived banding cross-engine at every tier. The
-# oracle shares _gov_np_sql and bands only the first np planes/table
-# out of a 12-plane VALUES headroom.
-_EMB_GOV_HEADROOM = 12
-
-
-def _emb_lsh_oracle_gov(num_tables: int, max_bucket: int, corpus_sql: str) -> str:
-    return f"""
-    WITH corpus AS ({corpus_sql}),
-    fixed AS ({_FIXED_SQL.format(corpus="SELECT * FROM corpus")}),
-    gov AS {_gov_np_sql("SELECT COUNT(*) FROM corpus", max_bucket, _EMB_GOV_HEADROOM)},
-    planes(p, i, c) AS (VALUES {_lsh_planes_values(num_tables * _EMB_GOV_HEADROOM)}),
-    signs AS (
-      SELECT vec_id, p,
-             CASE WHEN SUM(e * c) >= 0 THEN '1' ELSE '0' END AS sign
-      FROM fixed JOIN planes USING (i)
-      WHERE p < {num_tables} * (SELECT np FROM gov)
-      GROUP BY vec_id, p
-    ),
-    banded AS (
-      SELECT vec_id, p // (SELECT np FROM gov) AS tbl,
-             string_agg(sign, '' ORDER BY p) AS bucket
-      FROM signs GROUP BY vec_id, p // (SELECT np FROM gov)
-    ),
-    ok_buckets AS (
-      SELECT tbl, bucket FROM banded
-      GROUP BY tbl, bucket HAVING COUNT(*) BETWEEN 2 AND {max_bucket}
-    ),
+# Governed hard-negative miner: per anchor, the _HN_K most-similar
+# DIFFERENT-label vectors over the governed banding above. Its
+# pinned-geometry twin q_hard_negatives is in q09_privacy.
+@register(
+    "q_hard_negatives_auto",
+    f"""
+    WITH {_gov_banded_ctes()},
     cand AS (
-      SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
+      SELECT DISTINCT a.vec_id AS anchor_id, b.vec_id AS cand_id
       FROM banded a
       JOIN ok_buckets ob ON a.tbl = ob.tbl AND a.bucket = ob.bucket
       JOIN banded b ON b.tbl = a.tbl AND b.bucket = a.bucket
-                   AND a.vec_id < b.vec_id
+                   AND a.vec_id != b.vec_id
+      JOIN lab la ON la.vec_id = a.vec_id
+      JOIN lab lb ON lb.vec_id = b.vec_id
+      WHERE la.label != lb.label
     ),
     vecs AS MATERIALIZED (
       SELECT vec_id, list(e ORDER BY i) AS v, SUM(e * e) AS n2
       FROM fixed GROUP BY vec_id
     ),
-    dots AS (
-      SELECT id_a, id_b, list_inner_product(a.v, b.v) AS dot,
-             a.n2 AS na2, b.n2 AS nb2
-      FROM cand JOIN vecs a ON a.vec_id = id_a
-                JOIN vecs b ON b.vec_id = id_b
+    cos AS (
+      SELECT anchor_id, cand_id,
+             CAST(list_inner_product(a.v, b.v) AS DOUBLE)
+               / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE)))
+               AS cosine
+      FROM cand JOIN vecs a ON a.vec_id = anchor_id
+                JOIN vecs b ON b.vec_id = cand_id
+    ),
+    ranked AS (
+      SELECT anchor_id, cand_id, cosine,
+             ROW_NUMBER() OVER (PARTITION BY anchor_id
+                                ORDER BY cosine DESC, cand_id) AS rank
+      FROM cos
     )
-    SELECT id_a, id_b,
-           CAST(dot AS DOUBLE) / (sqrt(CAST(na2 AS DOUBLE)) * sqrt(CAST(nb2 AS DOUBLE))) AS cosine
-    FROM dots
-    WHERE CAST(dot AS DOUBLE) / (sqrt(CAST(na2 AS DOUBLE)) * sqrt(CAST(nb2 AS DOUBLE))) >= 0.9
-"""
+    SELECT anchor_id, cand_id AS neg_id, cosine, CAST(rank AS BIGINT) AS rank
+    FROM ranked WHERE rank <= {_HN_K}
+    """,
+)
+def q_hard_negatives_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from frames_spark.similarity.negatives import hard_negatives_lsh
 
-
-@register("q_dedup_embed_auto", _emb_lsh_oracle_gov(16, 400, _EMB_CORPUS_SQL))
-def q_dedup_embed_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    # num_planes omitted -> suggest_num_planes over the perturbed
-    # corpus count at max_bucket=400; guard="off" like every pinned
-    # registered query (the oracle mirrors the bucket cap exactly)
-    return embed_ops.near_dup_pairs_lsh(
-        _with_perturbed_copies(emb), "vec_id", "embedding",
-        threshold=0.9, num_tables=16, max_bucket=400,
-        guard="off",
+    # num_planes omitted -> the suggest_num_planes governor over a
+    # one-aggregate pre-flight; everything else matches the pinned twin
+    return hard_negatives_lsh(
+        emb,
+        "vec_id",
+        "embedding",
+        "label",
+        k=_HN_K,
+        num_tables=_HN_TABLES,
+        max_bucket=_HN_MAXB,
     )
 
 
@@ -1633,6 +1623,230 @@ def q_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# HyperLogLog estimate (operators/sketches.py hll_cells + hll_estimate)
+# against the exact distinct count; the oracle replays the register
+# relation bit-for-bit (see q_hll_cells in q08_sketch_select).
+@register(
+    "q_hll_estimate",
+    f"""
+    WITH h AS (
+      SELECT {hash60_sql("CAST(user_id AS VARCHAR)", "hll")} AS h FROM events
+    ), keyed AS (
+      SELECT h % 64 AS bucket, (h - (h % 64)) // 64 AS rem FROM h
+    ), cells AS (
+      SELECT bucket,
+             MAX(CASE WHEN rem = 0 THEN 55
+                      ELSE 54 - length(bin(rem)) + 1 END) AS max_rho
+      FROM keyed GROUP BY bucket
+    ), agg AS (
+      SELECT SUM(power(2.0, -max_rho)) AS z, COUNT(*) AS nb FROM cells
+    )
+    , r AS (
+      SELECT {0.709 * 64 * 64} / (z + CAST(64 - nb AS DOUBLE)) AS raw,
+             CAST(64 - nb AS DOUBLE) AS empty, nb
+      FROM agg
+    )
+    SELECT CAST(FLOOR(CASE WHEN raw <= {2.5 * 64} AND empty > 0
+                           THEN CAST(64 AS DOUBLE) * ln(CAST(64 AS DOUBLE) / empty)
+                           ELSE raw END * 1000000 + 0.5) AS BIGINT) AS est_micros,
+           CAST(FLOOR(raw * 1000000 + 0.5) AS BIGINT) AS raw_micros,
+           CAST(64 - nb AS BIGINT) AS n_empty,
+           (SELECT COUNT(DISTINCT user_id) FROM events) AS exact_distinct
+    FROM r
+    """,
+)
+def q_hll_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from frames_spark.operators.sketches import hll_cells, hll_estimate
+
+    ev = load_table(spark, sf_dir, "events")
+    est = hll_estimate(hll_cells(ev, "user_id"))
+    exact = ev.agg(F.countDistinct("user_id").alias("exact_distinct"))
+    return est.crossJoin(F.broadcast(exact))
+
+
+# Quantiles over integer micro-units: identical sort + identical
+# linear-interpolation arithmetic on both engines (the raw-double
+# version risks ulp drift in (1-f)*a + f*b; micros make a and b exact
+# integers so the expression is bit-stable).
+@register(
+    "q_quantiles",
+    f"""
+    SELECT o_orderpriority,
+           quantile_cont({_MICROS_SQL.format(expr='o_totalprice')}, 0.5) / 1000000 AS p50,
+           quantile_cont({_MICROS_SQL.format(expr='o_totalprice')}, 0.9) / 1000000 AS p90
+    FROM orders GROUP BY o_orderpriority
+    """,
+)
+def q_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = load_table(spark, sf_dir, "orders")
+    micros = _micros(F.col("o_totalprice"))
+    return o.groupBy("o_orderpriority").agg(
+        (F.percentile(micros, F.lit(0.5)) / 1000000).alias("p50"),
+        (F.percentile(micros, F.lit(0.9)) / 1000000).alias("p90"),
+    )
+
+
+# Mergeable HISTOGRAM quantile parts — the numeric twin of
+# q_sketch_users' HLL story: store per-day fixed-width bin counts
+# (O(days x bins) rows, written once per ingest window), answer any
+# date-range quantile by MERGING parts (a groupBy over the tiny parts
+# relation) — the event table is scanned once to build parts and never
+# again at query time. Estimates are bin lower bounds, deterministic
+# integers, so unlike percentile_approx this sketch has a FULL SQL
+# oracle. Bin width 100 currency units = 1e8 micros.
+@register(
+    "q_hist_quantiles",
+    f"""
+    WITH parts AS (
+      SELECT CAST(date_trunc('day', o_orderdate) AS TIMESTAMP) AS day,
+             {_MICROS_SQL.format(expr='o_totalprice')} // 100000000 AS bin,
+             COUNT(*) AS cnt
+      FROM orders GROUP BY 1, 2
+    ), merged AS (
+      SELECT bin, CAST(SUM(cnt) AS BIGINT) AS cnt FROM parts GROUP BY bin
+    ), cum AS (
+      SELECT bin, cnt,
+             CAST(SUM(cnt) OVER (ORDER BY bin) AS BIGINT) AS cum,
+             CAST(SUM(cnt) OVER () AS BIGINT) AS n
+      FROM merged
+    )
+    SELECT p, n, CAST(MIN(bin) * 100000000 AS BIGINT) AS est_lo_micros
+    FROM cum CROSS JOIN (
+      SELECT CAST(p AS DOUBLE) AS p
+      FROM (VALUES (0.25), (0.5), (0.75), (0.9), (0.99)) v(p)
+    ) v
+    WHERE cum >= ceil(p * n)
+    GROUP BY p, n
+    """,
+)
+def q_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window
+
+    o = load_table(spark, sf_dir, "orders")
+    day = F.date_trunc("day", F.col("o_orderdate"))
+    parts = o.groupBy(
+        day.alias("day"),
+        F.expr(
+            f"{_MICROS_SQL.format(expr='o_totalprice')} DIV 100000000"
+        ).alias("bin"),
+    ).agg(F.count(F.lit(1)).alias("cnt"))
+    merged = parts.groupBy("bin").agg(F.sum("cnt").alias("cnt"))
+    # windows over the MERGED bin relation only (~thousands of rows),
+    # never the fact table
+    cum = merged.select(
+        "bin",
+        F.sum("cnt").over(Window.orderBy("bin")).alias("cum"),
+        F.sum("cnt").over(Window.partitionBy()).alias("n"),
+    )
+    ps = F.explode(
+        F.array(*[F.lit(p) for p in (0.25, 0.5, 0.75, 0.9, 0.99)])
+    ).alias("p")
+    return (
+        cum.crossJoin(F.broadcast(cum.sparkSession.range(1).select(ps)))
+        .filter(F.col("cum") >= F.ceil(F.col("p") * F.col("n")))
+        .groupBy("p", "n")
+        .agg((F.min("bin") * F.lit(100000000)).cast("long").alias("est_lo_micros"))
+    )
+
+
+# Range join: every purchase within 1 hour after a click by the same
+# user. operators/rangejoin.py turns the non-equi range condition into
+# a bucketed equi-join (one shuffle, 2x right amplification) instead
+# of a per-key product.
+from frames_spark.operators.rangejoin import range_join  # noqa: E402
+
+
+@register(
+    "q_range_join",
+    """
+    SELECT l.event_id AS click_id, l.user_id,
+           r.event_id AS purchase_id, r.value AS purchase_value
+    FROM (SELECT * FROM events WHERE event_type = 'click') l
+    JOIN (SELECT * FROM events WHERE event_type = 'purchase') r
+      ON l.user_id = r.user_id
+     AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 1 HOUR
+    """,
+)
+def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        F.col("event_id").alias("click_id"), "user_id",
+        F.col("ts").alias("click_ts"),
+    )
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("purchase_id"), "user_id",
+        F.col("ts").alias("purchase_ts"),
+        F.col("value").alias("purchase_value"),
+    )
+    out = range_join(
+        clicks, purchases, key="user_id",
+        left_ts="click_ts", right_ts="purchase_ts", window_seconds=3600,
+    )
+    return out.select("click_id", "user_id", "purchase_id", "purchase_value")
+
+
+# N-gram Jaccard near-dup pairs via shingle inverted index, with the
+# pinned stop-shingle guard mirrored in the oracle's `rare` CTE (the
+# governed twin is q_dedup_ngram_auto).
+@register(
+    "q_dedup_ngram",
+    f"""
+    WITH corpus AS ({_NEAR_CORPUS_SQL}),
+    shingled0 AS ({_SHINGLES_SQL.format(tokens=_TOKENS_SQL, corpus="SELECT * FROM corpus")}),
+    rare AS (
+      SELECT shingle FROM shingled0 GROUP BY shingle
+      HAVING COUNT(*) <= {_SHINGLE_MAX_DF}
+    ),
+    shingled AS (SELECT s.* FROM shingled0 s JOIN rare USING (shingle)),
+    sizes AS (SELECT doc, COUNT(*) AS n_shingles FROM shingled GROUP BY doc),
+    inter AS (
+      SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_common
+      FROM shingled a JOIN shingled b ON a.shingle = b.shingle AND a.doc < b.doc
+      GROUP BY 1, 2
+    )
+    SELECT doc_a, doc_b,
+           CAST(n_common AS DOUBLE)
+             / CAST(sa.n_shingles + sb.n_shingles - n_common AS DOUBLE) AS jaccard
+    FROM inter
+    JOIN sizes sa ON doc_a = sa.doc
+    JOIN sizes sb ON doc_b = sb.doc
+    WHERE CAST(n_common AS DOUBLE)
+          / CAST(sa.n_shingles + sb.n_shingles - n_common AS DOUBLE) >= 0.6
+    """,
+)
+def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents")
+    # Explicit pin (the library default is now "auto"): this oracle's
+    # rare CTE hardcodes df <= _SHINGLE_MAX_DF, so the Spark side must
+    # pin the same cap. The governed twin is q_dedup_ngram_auto.
+    return jac_ops.jaccard_pairs(
+        _with_near_copies(docs), "doc_id", "text", n=3, threshold=0.6,
+        max_df=_SHINGLE_MAX_DF, guard="off",
+    )
+
+
+# Pinned-geometry embedding near-dup pairs (the formulation witness
+# for _emb_lsh_oracle; the governed twin is q_dedup_embed_auto).
+@register("q_dedup_embed", _emb_lsh_oracle(4, 16, 4000, _EMB_CORPUS_SQL))
+def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # BUCKETED path: hyperplane-LSH candidates, exact fixed-point
+    # cosine inside buckets; the O(n^2) all-pairs form never appears
+    # in an execution plan. Short 4-plane bands x 16 tables: per-band
+    # collision at the 0.9 threshold is (1 - acos(0.9)/pi)^4 ~ 0.54,
+    # so 16 independent bands give ~0.99999 per-pair recall at the
+    # decision boundary (and ~1.0 for the near-identical copies dedup
+    # actually targets). The oracle models THIS candidate generation
+    # bit-for-bit (see _emb_lsh_oracle), so the gate cannot flake on
+    # a boundary miss after a data regeneration; recall vs the exact
+    # all-pairs semantics is measured by q_embed_lsh_recall.
+    emb = load_table(spark, sf_dir, "embeddings")
+    return embed_ops.near_dup_pairs_lsh(
+        _with_perturbed_copies(emb), "vec_id", "embedding",
+        threshold=0.9, num_planes=4, num_tables=16, max_bucket=4000,
+        guard="off",
+    )
+
+
 # HLL sketch distinct — tolerance-boolean value gate (r10 verdict
 # #3): the estimate itself is engine-native by design (Spark's
 # HLL++, deterministic for fixed input but unreproducible in SQL),
@@ -1663,28 +1877,6 @@ def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             * 10
             <= F.col("n_parts_exact")
         ).alias("within_tol"),
-    )
-
-
-# Quantiles over integer micro-units: identical sort + identical
-# linear-interpolation arithmetic on both engines (the raw-double
-# version risks ulp drift in (1-f)*a + f*b; micros make a and b exact
-# integers so the expression is bit-stable).
-@register(
-    "q_quantiles",
-    f"""
-    SELECT o_orderpriority,
-           quantile_cont({_MICROS_SQL.format(expr='o_totalprice')}, 0.5) / 1000000 AS p50,
-           quantile_cont({_MICROS_SQL.format(expr='o_totalprice')}, 0.9) / 1000000 AS p90
-    FROM orders GROUP BY o_orderpriority
-    """,
-)
-def q_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    micros = _micros(F.col("o_totalprice"))
-    return o.groupBy("o_orderpriority").agg(
-        (F.percentile(micros, F.lit(0.5)) / 1000000).alias("p50"),
-        (F.percentile(micros, F.lit(0.9)) / 1000000).alias("p90"),
     )
 
 
@@ -1724,42 +1916,6 @@ def q_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             "within_tol"
         ),
     )
-
-
-# Range join: every purchase within 1 hour after a click by the same
-# user. operators/rangejoin.py turns the non-equi range condition into
-# a bucketed equi-join (one shuffle, 2x right amplification) instead
-# of a per-key product.
-from frames_spark.operators.rangejoin import range_join  # noqa: E402
-
-
-@register(
-    "q_range_join",
-    """
-    SELECT l.event_id AS click_id, l.user_id,
-           r.event_id AS purchase_id, r.value AS purchase_value
-    FROM (SELECT * FROM events WHERE event_type = 'click') l
-    JOIN (SELECT * FROM events WHERE event_type = 'purchase') r
-      ON l.user_id = r.user_id
-     AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 1 HOUR
-    """,
-)
-def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"), "user_id",
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"), "user_id",
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("purchase_value"),
-    )
-    out = range_join(
-        clicks, purchases, key="user_id",
-        left_ts="click_ts", right_ts="purchase_ts", window_seconds=3600,
-    )
-    return out.select("click_id", "user_id", "purchase_id", "purchase_value")
 
 
 # IVF ANN over the DETERMINISTIC ±1 md5 codebook quantizer

@@ -1,23 +1,28 @@
-"""q02_analytics — part 2/8 of the query registry.
-
-Split from the original single-module registry (r8): each part chains
-from its predecessor, replicating the original file's LEXICAL order —
-helpers and SQL-fragment constants defined (or redefined) in an
-earlier part are visible here exactly as they were mid-file, and the
-shared QUERIES/ORACLES dicts are the same objects throughout. The
-final registration ORDER is the literal manifest
-(frames_spark/registry_order.py), applied in the package __init__.
+"""q02_analytics — query registry, module 2 of 9: data-quality
+expectations, funnels, SCD2 and point-in-time joins, sampling,
+chunking/decontamination, PII redaction, table diffs and the
+TPC-H-style analytic reports.
 """
 
 from __future__ import annotations
 
-import frames_spark.queries.q01_core_ops as _prev
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-globals().update(
-    {k: v for k, v in vars(_prev).items() if not k.startswith("__")}
+from frames_spark.functions import text as text_fns
+from frames_spark.functions.hashing import hash60_sql
+from frames_spark.operators import joins as join_ops
+from frames_spark.operators import window as win_ops
+from frames_spark.operators.asof import asof_join
+from frames_spark.queries.q01_core_ops import (
+    _MICROS_SQL,
+    _SHINGLES_SQL,
+    _TOKENS_SQL,
+    _micros,
+    _tokens_col,
+    register,
 )
-del _prev
-
+from frames_spark.sources.tables import load_table
 
 
 # ---------------------------------------------------------------------------
@@ -1529,34 +1534,6 @@ def q_scd2_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _scd2_pit_frame(
         load_table(spark, sf_dir, "orders"),
         load_table(spark, sf_dir, "events"),
-    )
-
-
-# Subset-witness twin (r12 verdict #3): the SAME point-in-time
-# enrichment restricted to the deterministic user/customer key range
-# below 1500 on BOTH sides — an equality join on that key, so the
-# subset result is exactly the full result's restriction. At sf1 the
-# events side is the sf0.1-full workload (~100k events) while the
-# full query's oracle (~2157 s DuckDB share at sf1, dominated by the
-# between-join) stays off the sweep's hot path.
-_SCD2_SMALL_MAX_KEY = 1_500
-
-
-@register(
-    "q_scd2_pit_small",
-    _scd2_pit_sql(
-        f"WHERE o_custkey < {_SCD2_SMALL_MAX_KEY}",
-        f"WHERE user_id < {_SCD2_SMALL_MAX_KEY}",
-    ),
-)
-def q_scd2_pit_small(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _scd2_pit_frame(
-        load_table(spark, sf_dir, "orders").filter(
-            F.col("o_custkey") < _SCD2_SMALL_MAX_KEY
-        ),
-        load_table(spark, sf_dir, "events").filter(
-            F.col("user_id") < _SCD2_SMALL_MAX_KEY
-        ),
     )
 
 

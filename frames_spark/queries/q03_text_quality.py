@@ -1,23 +1,43 @@
-"""q03_text_quality — part 3/8 of the query registry.
-
-Split from the original single-module registry (r8): each part chains
-from its predecessor, replicating the original file's LEXICAL order —
-helpers and SQL-fragment constants defined (or redefined) in an
-earlier part are visible here exactly as they were mid-file, and the
-shared QUERIES/ORACLES dicts are the same objects throughout. The
-final registration ORDER is the literal manifest
-(frames_spark/registry_order.py), applied in the package __init__.
+"""q03_text_quality — query registry, module 3 of 9: n-gram language
+models, boilerplate and cross-source duplicate rates, as-of joins,
+distinct-user sketches, MinHash estimator accuracy, the time-series
+reports (survival, autocorrelation, RFM, moving averages), Gopher
+quality, heavy hitters and BM25.
 """
 
 from __future__ import annotations
 
-import frames_spark.queries.q02_analytics as _prev
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-globals().update(
-    {k: v for k, v in vars(_prev).items() if not k.startswith("__")}
+from frames_spark.dedup import embedding as embed_ops
+from frames_spark.dedup import jaccard as jac_ops
+from frames_spark.dedup import minhash as mh_ops
+from frames_spark.functions import text as text_fns
+from frames_spark.functions.hashing import hash60_sql
+from frames_spark.operators import core as core_ops
+from frames_spark.operators.asof import asof_join
+from frames_spark.operators.ranking import grouped_rank, ntile_from_rank
+from frames_spark.queries.q01_core_ops import (
+    _DUP_OFFSET,
+    _FIXED_SQL,
+    _MH_BANDS,
+    _MH_CTES,
+    _MH_K,
+    _MH_PAIRS_SELECT,
+    _MH_ROWS,
+    _MICROS_SQL,
+    _MINHASH_PAIRS_SQL,
+    _NORM_SQL,
+    _TOKENS_SQL,
+    _lsh_planes_values,
+    _micros,
+    _tokens_col,
+    _with_near_copies,
+    register,
 )
-del _prev
-
+from frames_spark.similarity import ann as ann_ops
+from frames_spark.sources.tables import load_table
 
 
 # Corpus-unigram-LM quality score: mean token log-probability per doc
@@ -956,28 +976,6 @@ _MH_ACCURACY_SUFFIX = f"""
 @register("q_minhash_accuracy", _MH_CTES + _MH_ACCURACY_SUFFIX)
 def q_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _with_near_copies(load_table(spark, sf_dir, "documents"))
-    return _minhash_accuracy_frame(docs)
-
-
-# Subset-witness twin (r12 verdict #3): the SAME estimator-accuracy
-# relation over the deterministic doc_id < 5000 base corpus (+ its
-# near copies) — at sf1 that is exactly the sf0.1-full workload, so
-# the family re-sweeps at 10x density in sf0.1 time while the full
-# query's oracle (~391 s DuckDB share at sf1) stays off the hot path.
-_MH_SMALL_MAX_DOC = 5_000
-
-
-@register(
-    "q_minhash_accuracy_small",
-    _mh_ctes_sql(_near_corpus_sql(f"WHERE doc_id < {_MH_SMALL_MAX_DOC}"))
-    + _MH_ACCURACY_SUFFIX,
-)
-def q_minhash_accuracy_small(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _with_near_copies(
-        load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") < _MH_SMALL_MAX_DOC
-        )
-    )
     return _minhash_accuracy_frame(docs)
 
 
@@ -2316,69 +2314,6 @@ def q_embed_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.lit(fp2)
             ).alias("cov"),
         )
-    )
-
-
-# Mergeable HISTOGRAM quantile parts — the numeric twin of
-# q_sketch_users' HLL story: store per-day fixed-width bin counts
-# (O(days x bins) rows, written once per ingest window), answer any
-# date-range quantile by MERGING parts (a groupBy over the tiny parts
-# relation) — the event table is scanned once to build parts and never
-# again at query time. Estimates are bin lower bounds, deterministic
-# integers, so unlike percentile_approx this sketch has a FULL SQL
-# oracle. Bin width 100 currency units = 1e8 micros.
-@register(
-    "q_hist_quantiles",
-    f"""
-    WITH parts AS (
-      SELECT CAST(date_trunc('day', o_orderdate) AS TIMESTAMP) AS day,
-             {_MICROS_SQL.format(expr='o_totalprice')} // 100000000 AS bin,
-             COUNT(*) AS cnt
-      FROM orders GROUP BY 1, 2
-    ), merged AS (
-      SELECT bin, CAST(SUM(cnt) AS BIGINT) AS cnt FROM parts GROUP BY bin
-    ), cum AS (
-      SELECT bin, cnt,
-             CAST(SUM(cnt) OVER (ORDER BY bin) AS BIGINT) AS cum,
-             CAST(SUM(cnt) OVER () AS BIGINT) AS n
-      FROM merged
-    )
-    SELECT p, n, CAST(MIN(bin) * 100000000 AS BIGINT) AS est_lo_micros
-    FROM cum CROSS JOIN (
-      SELECT CAST(p AS DOUBLE) AS p
-      FROM (VALUES (0.25), (0.5), (0.75), (0.9), (0.99)) v(p)
-    ) v
-    WHERE cum >= ceil(p * n)
-    GROUP BY p, n
-    """,
-)
-def q_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    o = load_table(spark, sf_dir, "orders")
-    day = F.date_trunc("day", F.col("o_orderdate"))
-    parts = o.groupBy(
-        day.alias("day"),
-        F.expr(
-            f"{_MICROS_SQL.format(expr='o_totalprice')} DIV 100000000"
-        ).alias("bin"),
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    merged = parts.groupBy("bin").agg(F.sum("cnt").alias("cnt"))
-    # windows over the MERGED bin relation only (~thousands of rows),
-    # never the fact table
-    cum = merged.select(
-        "bin",
-        F.sum("cnt").over(Window.orderBy("bin")).alias("cum"),
-        F.sum("cnt").over(Window.partitionBy()).alias("n"),
-    )
-    ps = F.explode(
-        F.array(*[F.lit(p) for p in (0.25, 0.5, 0.75, 0.9, 0.99)])
-    ).alias("p")
-    return (
-        cum.crossJoin(F.broadcast(cum.sparkSession.range(1).select(ps)))
-        .filter(F.col("cum") >= F.ceil(F.col("p") * F.col("n")))
-        .groupBy("p", "n")
-        .agg((F.min("bin") * F.lit(100000000)).cast("long").alias("est_lo_micros"))
     )
 
 

@@ -1,23 +1,31 @@
-"""q04_skew_stats — part 4/8 of the query registry.
-
-Split from the original single-module registry (r8): each part chains
-from its predecessor, replicating the original file's LEXICAL order —
-helpers and SQL-fragment constants defined (or redefined) in an
-earlier part are visible here exactly as they were mid-file, and the
-shared QUERIES/ORACLES dicts are the same objects throughout. The
-final registration ORDER is the literal manifest
-(frames_spark/registry_order.py), applied in the package __init__.
+"""q04_skew_stats — query registry, module 4 of 9: key skew and salted
+aggregation, retention/churn cohorts, graph queries (triangles,
+degrees, PageRank), funnels and attribution, product quantization
+ANN, and the distribution tests (KS, PSI, Benford, Mann-Whitney).
 """
 
 from __future__ import annotations
 
-import frames_spark.queries.q03_text_quality as _prev
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-globals().update(
-    {k: v for k, v in vars(_prev).items() if not k.startswith("__")}
+from frames_spark.functions import text as text_fns
+from frames_spark.functions.hashing import hash60_sql
+from frames_spark.operators import core as core_ops
+from frames_spark.operators import window as win_ops
+from frames_spark.operators.ranking import grouped_rank
+from frames_spark.queries.q01_core_ops import (
+    _FIXED_SQL,
+    _IVF_CENTS_VALUES,
+    _MICROS_SQL,
+    _TOKENS_SQL,
+    ORACLES,
+    _lang_case,
+    _micros,
+    register,
 )
-del _prev
-
+from frames_spark.queries.q03_text_quality import q_minhash_accuracy
+from frames_spark.sources.tables import load_table
 
 
 # Join-key skew diagnostics — the pre-flight check a 100 TB join

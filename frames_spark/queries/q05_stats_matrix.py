@@ -1,23 +1,40 @@
-"""q05_stats_matrix — part 5/8 of the query registry.
-
-Split from the original single-module registry (r8): each part chains
-from its predecessor, replicating the original file's LEXICAL order —
-helpers and SQL-fragment constants defined (or redefined) in an
-earlier part are visible here exactly as they were mid-file, and the
-shared QUERIES/ORACLES dicts are the same objects throughout. The
-final registration ORDER is the literal manifest
-(frames_spark/registry_order.py), applied in the package __init__.
+"""q05_stats_matrix — query registry, module 5 of 9: correlation
+matrices and rank statistics, hypothesis tests, concentration
+(Zipf, HHI, Lorenz, Heaps), seasonal and trend estimators, substring
+dedup and per-source entropy/KL reports.
 """
 
 from __future__ import annotations
 
-import frames_spark.queries.q04_skew_stats as _prev
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-globals().update(
-    {k: v for k, v in vars(_prev).items() if not k.startswith("__")}
+from frames_spark.functions import text as text_fns
+from frames_spark.functions.hashing import hash60_sql
+from frames_spark.operators import core as core_ops
+from frames_spark.operators import joins as join_ops
+from frames_spark.operators.ranking import (
+    grouped_prefix_sum,
+    grouped_rank,
+    ntile_from_rank,
 )
-del _prev
-
+from frames_spark.queries.q01_core_ops import (
+    _ANN_PLANES_VALUES,
+    _FIXED_SQL,
+    _MICROS_SQL,
+    _TOKENS_SQL,
+    _micros,
+    register,
+)
+from frames_spark.queries.q03_text_quality import (
+    _SKQ_AMM,
+    _SKQ_EST_SQL,
+    _SKQ_M,
+    _SKQ_P,
+    _SKQ_RHO_SQL,
+)
+from frames_spark.similarity import ann as ann_ops
+from frames_spark.sources.tables import load_table
 
 
 # Pairwise Pearson correlation MATRIX over lineitem's numeric columns

@@ -1,23 +1,41 @@
-"""q06_eval_ml — part 6/8 of the query registry.
-
-Split from the original single-module registry (r8): each part chains
-from its predecessor, replicating the original file's LEXICAL order —
-helpers and SQL-fragment constants defined (or redefined) in an
-earlier part are visible here exactly as they were mid-file, and the
-shared QUERIES/ORACLES dicts are the same objects throughout. The
-final registration ORDER is the literal manifest
-(frames_spark/registry_order.py), applied in the package __init__.
+"""q06_eval_ml — query registry, module 6 of 9: evaluation and ML data
+prep (splits, class weights, negative sampling, dataset cards), BPE
+pair counts, chunk and line dedup, containment, HTML extraction,
+Gopher repetition and the variance/association tests.
 """
 
 from __future__ import annotations
 
-import frames_spark.queries.q05_stats_matrix as _prev
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-globals().update(
-    {k: v for k, v in vars(_prev).items() if not k.startswith("__")}
+from frames_spark.dedup import jaccard as jac_ops
+from frames_spark.dedup import minhash as mh_ops
+from frames_spark.functions import text as text_fns
+from frames_spark.operators import core as core_ops
+from frames_spark.operators import joins as join_ops
+from frames_spark.operators import sampling as sample_ops
+from frames_spark.operators.ranking import grouped_rank
+from frames_spark.queries.q01_core_ops import (
+    _ANN_PLANES_VALUES,
+    _FIXED_SQL,
+    _MH_BANDS,
+    _MH_CTES,
+    _MH_K,
+    _MH_PAIRS_SELECT,
+    _MH_ROWS,
+    _MICROS_SQL,
+    _NEAR_CORPUS_SQL,
+    _NORM_SQL,
+    _SHINGLES_SQL,
+    _TOKENS_SQL,
+    _micros,
+    _with_near_copies,
+    register,
 )
-del _prev
-
+from frames_spark.queries.q05_stats_matrix import _central_moments, _central_moments_sql
+from frames_spark.similarity import ann as ann_ops
+from frames_spark.sources.tables import load_table
 
 
 # ---------------------------------------------------------------------------
@@ -492,76 +510,6 @@ def q_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("n"), "pair")
         .limit(20)
     )
-
-
-# ---------------------------------------------------------------------------
-# The BPE merge LOOP itself, fully oracled: 3 training rounds as
-# (round, merge_a, merge_b, n) — the pair merged each round plus its
-# corpus frequency at the moment it won. Spark runs the real trainer
-# (functions/bpe.py train_bpe_history: per-round pair-count shuffle,
-# pure-JVM greedy fold merge, localCheckpoint lineage cut); the
-# oracle unrolls the identical 3 rounds as MATERIALIZED CTEs (the
-# markov/unigram/pagerank idiom), with the greedy left-to-right merge
-# expressed as a DuckDB list_reduce over singleton-list symbols — the
-# exact fold semantics of operators _merge_expr (after a merge the
-# new symbol cannot re-pair with the symbol it just consumed, runs of
-# an identical pair collapse floor(k/2) times from the left). The
-# per-round WHERE n >= 2 mirrors the trainer's early stop.
-# ---------------------------------------------------------------------------
-_BPE_MERGE_ROUND = """
-    pc{k} AS MATERIALIZED (
-      SELECT s[i] || ' ' || s[i+1] AS pair, SUM(cnt) AS n
-      FROM (SELECT syms AS s, cnt FROM v{prev}),
-           unnest(range(1, greatest(len(s), 1))) AS u(i)
-      GROUP BY pair
-    ),
-    m{k} AS MATERIALIZED (
-      SELECT string_split(pair, ' ')[1] AS a,
-             string_split(pair, ' ')[2] AS b,
-             CAST(n AS BIGINT) AS n
-      FROM pc{k} WHERE n >= 2
-      ORDER BY n DESC, pair LIMIT 1
-    ),
-    v{k} AS MATERIALIZED (
-      SELECT cnt,
-             list_reduce(list_transform(v.syms, x -> [x]),
-               (acc, x) -> CASE
-                 WHEN acc[len(acc)] = m.a AND x[1] = m.b
-                 THEN list_concat(acc[1:len(acc)-1], [m.a || m.b])
-                 ELSE list_concat(acc, x) END) AS syms
-      FROM v{prev} v CROSS JOIN m{k} m
-    )"""
-
-
-@register(
-    "q_bpe_merges",
-    f"""
-    WITH wc AS MATERIALIZED (
-      SELECT tok AS word, COUNT(*) AS cnt
-      FROM (SELECT unnest({_TOKENS_SQL}) AS tok FROM documents)
-      WHERE regexp_full_match(tok, '^[a-z]+$')
-      GROUP BY tok
-    ),
-    v0 AS MATERIALIZED (
-      SELECT cnt, string_split(word, '') AS syms FROM wc
-    ),{_BPE_MERGE_ROUND.format(k=1, prev=0)},{_BPE_MERGE_ROUND.format(k=2, prev=1)},{_BPE_MERGE_ROUND.format(k=3, prev=2)}
-    SELECT * FROM (
-      SELECT CAST(1 AS BIGINT) AS round, a AS merge_a, b AS merge_b, n FROM m1
-      UNION ALL
-      SELECT CAST(2 AS BIGINT), a, b, n FROM m2
-      UNION ALL
-      SELECT CAST(3 AS BIGINT), a, b, n FROM m3
-    ) ORDER BY round
-    """,
-)
-def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from frames_spark.functions.bpe import train_bpe_history
-
-    docs = core_ops.spread(load_table(spark, sf_dir, "documents"))
-    history = train_bpe_history(docs, "text", n_merges=3)
-    return spark.createDataFrame(
-        history, "round bigint, merge_a string, merge_b string, n bigint"
-    ).orderBy("round")
 
 
 # ---------------------------------------------------------------------------
@@ -1305,61 +1253,6 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         jac_ops.containment_pairs(
             _with_near_copies(docs), "doc_id", "text", 3,
             max_df=_CONTAIN_MAX_DF, guard="off",
-        )
-        .filter(5 * F.col("n_common") >= 4 * F.col("n_shingles_a"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.col("n_common").cast("long").alias("n_common"),
-            "containment",
-        )
-    )
-
-
-# The GOVERNED containment twin (r14 — the last fixed-cap dedup family
-# without an oracle-gated governor witness; the pinned df<=64 cap above
-# stops every shingle at ~10x the bench corpus and q_containment is
-# agreed-empty at sf1, the exact inverse-guard failure q_dedup_ngram_auto
-# was built to witness for the Jaccard family). max_df="auto" derives
-# the stop-shingle cap from a one-aggregate corpus-count pre-flight
-# (suggest_max_df — boilerplate is a RATE, not a count); the oracle's
-# gov CTE interpolates the SAME module constants the governor defaults
-# to (DEFAULT_MAX_DF floor + DEFAULT_MAX_DF_RATE_PPM rate), so the
-# value check certifies the derived cap cross-engine at whatever SF
-# the sweep runs and the two formulations cannot silently desync.
-@register(
-    "q_containment_auto",
-    f"""
-    WITH corpus AS ({_NEAR_CORPUS_SQL}),
-    gov AS (SELECT GREATEST({jac_ops.DEFAULT_MAX_DF},
-                            COUNT(*) * {jac_ops.DEFAULT_MAX_DF_RATE_PPM} // 1000000) AS max_df
-            FROM corpus),
-    shingled0 AS ({_SHINGLES_SQL.format(tokens=_TOKENS_SQL, corpus="SELECT * FROM corpus")}),
-    rare AS (
-      SELECT shingle FROM shingled0 GROUP BY shingle
-      HAVING COUNT(*) <= (SELECT max_df FROM gov)
-    ),
-    shingled AS (SELECT s.* FROM shingled0 s JOIN rare USING (shingle)),
-    sizes AS (SELECT doc, COUNT(*) AS n_shingles FROM shingled GROUP BY doc),
-    inter AS (
-      SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_common
-      FROM shingled a JOIN shingled b ON a.shingle = b.shingle AND a.doc <> b.doc
-      GROUP BY 1, 2
-    )
-    SELECT doc_a, doc_b,
-           CAST(n_common AS BIGINT) AS n_common,
-           CAST(n_common AS DOUBLE) / CAST(sa.n_shingles AS DOUBLE)
-             AS containment
-    FROM inter JOIN sizes sa ON doc_a = sa.doc
-    WHERE 5 * n_common >= 4 * sa.n_shingles
-    """,
-)
-def q_containment_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        jac_ops.containment_pairs(
-            _with_near_copies(docs), "doc_id", "text", 3, max_df="auto",
-            guard="off",
         )
         .filter(5 * F.col("n_common") >= 4 * F.col("n_shingles_a"))
         .select(

@@ -1,23 +1,44 @@
-"""q07_corpus_gates — part 7/8 of the query registry.
-
-Split from the original single-module registry (r8): each part chains
-from its predecessor, replicating the original file's LEXICAL order —
-helpers and SQL-fragment constants defined (or redefined) in an
-earlier part are visible here exactly as they were mid-file, and the
-shared QUERIES/ORACLES dicts are the same objects throughout. The
-final registration ORDER is the literal manifest
-(frames_spark/registry_order.py), applied in the package __init__.
+"""q07_corpus_gates — query registry, module 7 of 9: corpus quality
+gates and curation (Gopher, CCNet buckets, DSIR, naive Bayes),
+packing and context-fit accounting, time travel and snapshot diffs,
+incremental dedup, SimHash accuracy, SemDeDup and link prediction.
 """
 
 from __future__ import annotations
 
-import frames_spark.queries.q06_eval_ml as _prev
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-globals().update(
-    {k: v for k, v in vars(_prev).items() if not k.startswith("__")}
+from frames_spark.dedup import cluster as cluster_ops
+from frames_spark.dedup import jaccard as jac_ops
+from frames_spark.dedup import simhash as simh_ops
+from frames_spark.functions import gopher as gopher_fns
+from frames_spark.functions import text as text_fns
+from frames_spark.functions.hashing import hash60_sql
+from frames_spark.operators import core as core_ops
+from frames_spark.operators.diff import table_diff
+from frames_spark.operators.ranking import grouped_prefix_sum, grouped_rank
+from frames_spark.queries.q01_core_ops import (
+    _DUP_OFFSET,
+    _FIXED_SQL,
+    _MH_BANDS,
+    _MH_CTES,
+    _MH_K,
+    _MH_ROWS,
+    _MINHASH_PAIRS_SQL,
+    _NEAR_CORPUS_SQL,
+    _NORM_SQL,
+    _SHINGLE_MAX_DF,
+    _SHINGLES_SQL,
+    _TOKENS_SQL,
+    _emb_corpus_sql,
+    _micros,
+    _tokens_col,
+    _with_near_copies,
+    _with_perturbed_copies,
+    register,
 )
-del _prev
-
+from frames_spark.sources.tables import load_table
 
 
 # ---------------------------------------------------------------------------
@@ -479,75 +500,6 @@ def q_dedup_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # relation feeds every threshold row
     pairs = jac_ops.jaccard_pair_counts(
         corpus, "doc_id", "text", 3, max_df=_SHINGLE_MAX_DF, guard="off"
-    ).select(
-        "doc_a",
-        "doc_b",
-        "n_common",
-        (F.col("size_a") + F.col("size_b") - F.col("n_common")).alias("n_union"),
-    )
-    ts = spark.range(5, 10).select(F.col("id").alias("t"))
-    hit = 10 * F.col("n_common") >= F.col("t") * F.col("n_union")
-    return (
-        pairs.crossJoin(F.broadcast(ts))
-        .groupBy("t")
-        .agg(
-            F.count(F.when(hit, 1)).cast("long").alias("n_pairs"),
-            F.countDistinct(F.when(hit, F.col("doc_b")))
-            .cast("long")
-            .alias("n_docs_dropped"),
-        )
-        .select(F.col("t").cast("long").alias("threshold_tenths"), "n_pairs", "n_docs_dropped")
-    )
-
-
-# Governed twin of q_dedup_curve (r14, paired with q_containment_auto):
-# the pinned df<=64 cap above makes the curve agreed-empty (all-zero
-# rows) at ~10x the bench corpus; max_df="auto" derives the cap from
-# the corpus count via suggest_max_df, and the oracle's gov CTE
-# interpolates the SAME module constants (floor + rate) so the derived
-# cap is value-certified cross-engine at every sweep SF.
-@register(
-    "q_dedup_curve_auto",
-    f"""
-    WITH corpus AS ({_NEAR_CORPUS_SQL}),
-    gov AS (SELECT GREATEST({jac_ops.DEFAULT_MAX_DF},
-                            COUNT(*) * {jac_ops.DEFAULT_MAX_DF_RATE_PPM} // 1000000) AS max_df
-            FROM corpus),
-    shingled0 AS ({_SHINGLES_SQL.format(tokens=_TOKENS_SQL, corpus="SELECT * FROM corpus")}),
-    rare AS (
-      SELECT shingle FROM shingled0 GROUP BY shingle
-      HAVING COUNT(*) <= (SELECT max_df FROM gov)
-    ),
-    shingled AS (SELECT s.* FROM shingled0 s JOIN rare USING (shingle)),
-    sizes AS (SELECT doc, COUNT(*) AS n_shingles FROM shingled GROUP BY doc),
-    inter AS (
-      SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_common
-      FROM shingled a JOIN shingled b ON a.shingle = b.shingle AND a.doc < b.doc
-      GROUP BY 1, 2
-    ),
-    pairs AS (
-      SELECT doc_a, doc_b, n_common,
-             sa.n_shingles + sb.n_shingles - n_common AS n_union
-      FROM inter
-      JOIN sizes sa ON doc_a = sa.doc
-      JOIN sizes sb ON doc_b = sb.doc
-    ),
-    ts(t) AS (VALUES (5), (6), (7), (8), (9))
-    SELECT CAST(ts.t AS BIGINT) AS threshold_tenths,
-           CAST(COUNT(CASE WHEN 10 * n_common >= ts.t * n_union THEN 1 END)
-                AS BIGINT) AS n_pairs,
-           CAST(COUNT(DISTINCT CASE WHEN 10 * n_common >= ts.t * n_union
-                                    THEN doc_b END) AS BIGINT)
-             AS n_docs_dropped
-    FROM pairs CROSS JOIN ts
-    GROUP BY ts.t
-    """,
-)
-def q_dedup_curve_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = _with_near_copies(docs)
-    pairs = jac_ops.jaccard_pair_counts(
-        corpus, "doc_id", "text", 3, max_df="auto", guard="off"
     ).select(
         "doc_a",
         "doc_b",
@@ -2038,27 +1990,6 @@ def _link_prediction_sql(lineitem_where: str = "") -> str:
 @register("q_link_prediction", _link_prediction_sql())
 def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    return _link_prediction_frame(li)
-
-
-# Subset-witness twin (r12 verdict #3): the SAME prediction over the
-# co-purchase graph of the deterministic first 150k orders — at sf1
-# that is the sf0.1-full order count, so the family re-sweeps at 10x
-# density in roughly sf0.1 time while the full query's oracle (~695 s
-# DuckDB share at sf1, dominated by the wedge expansion) stays off
-# the sweep's hot path. An order-subset graph is a subgraph, so every
-# stage (degrees, wedges, anti-join) exercises the same code path.
-_LP_SMALL_MAX_ORDERKEY = 150_000
-
-
-@register(
-    "q_link_prediction_small",
-    _link_prediction_sql(f"WHERE l_orderkey < {_LP_SMALL_MAX_ORDERKEY}"),
-)
-def q_link_prediction_small(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_orderkey") < _LP_SMALL_MAX_ORDERKEY
-    )
     return _link_prediction_frame(li)
 
 

@@ -1,23 +1,51 @@
-"""q08_sketch_select — part 8/8 of the query registry.
-
-Split from the original single-module registry (r8): each part chains
-from its predecessor, replicating the original file's LEXICAL order —
-helpers and SQL-fragment constants defined (or redefined) in an
-earlier part are visible here exactly as they were mid-file, and the
-shared QUERIES/ORACLES dicts are the same objects throughout. The
-final registration ORDER is the literal manifest
-(frames_spark/registry_order.py), applied in the package __init__.
+"""q08_sketch_select — query registry, module 8 of 9: data selection
+(DSIR by source, k-center, curated selection), hybrid retrieval,
+edit-distance joins and entity clusters, mergeable sketches (HLL
+cells/union, Bloom, KMV, winnowing) and the unigram-LM tokenizer.
 """
 
 from __future__ import annotations
 
-import frames_spark.queries.q07_corpus_gates as _prev
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-globals().update(
-    {k: v for k, v in vars(_prev).items() if not k.startswith("__")}
+from frames_spark.dedup import cluster as cluster_ops
+from frames_spark.dedup import embedding as embed_ops
+from frames_spark.dedup import semdedup as sem_ops
+from frames_spark.functions import text as text_fns
+from frames_spark.functions.hashing import hash60_sql
+from frames_spark.operators import core as core_ops
+from frames_spark.pipelines import dsir as dsir_ops
+from frames_spark.pipelines import nbayes as nb_ops
+from frames_spark.queries.q01_core_ops import (
+    _FIXED_SQL,
+    _MICROS_SQL,
+    _NEAR_CORPUS_SQL,
+    _NORM_SQL,
+    _TOKENS_SQL,
+    ORACLES,
+    _emb_corpus_sql,
+    _emb_exact_oracle,
+    _lsh_planes_values,
+    _micros,
+    _with_near_copies,
+    _with_perturbed_copies,
+    register,
 )
-del _prev
-
+from frames_spark.queries.q03_text_quality import _BM25_TERMS, _BM25_TERMS_SQL
+from frames_spark.queries.q07_corpus_gates import (
+    _DSIR_B,
+    _NB_B,
+    _SEM_CORPUS_SQL,
+    _SEM_K,
+    _SEM_MAX_CLUSTER,
+    _SEM_TAU,
+    _sem_cents_values,
+    _sem_corpus,
+    _semdedup_oracle,
+)
+from frames_spark.similarity import ann as ann_ops
+from frames_spark.sources.tables import load_table
 
 
 # Domain-level importance: mean DSIR log-weight per source — the
@@ -793,9 +821,10 @@ def q_curate_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 # strips leading zeros identically in both engines), so — unlike the
 # engine-native q_approx_distinct, which stays rows-only by design —
 # the stored, MERGEABLE sketch itself is value-gated, the same
-# upgrade the Count-Min sketch got in round 6. q_hll_estimate checks
-# the raw estimator (exact dyadic 2^-rho sums; one closing division)
-# against the true distinct count.
+# upgrade the Count-Min sketch got in round 6. q_hll_estimate
+# (q01_core_ops, inside the driver window) checks the raw estimator
+# (exact dyadic 2^-rho sums; one closing division) against the true
+# distinct count.
 # ---------------------------------------------------------------------------
 @register(
     "q_hll_cells",
@@ -818,44 +847,6 @@ def q_hll_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hll_cells(ev, "user_id").select(
         "bucket", F.col("max_rho").cast("int").alias("max_rho")
     )
-
-
-@register(
-    "q_hll_estimate",
-    f"""
-    WITH h AS (
-      SELECT {hash60_sql("CAST(user_id AS VARCHAR)", "hll")} AS h FROM events
-    ), keyed AS (
-      SELECT h % 64 AS bucket, (h - (h % 64)) // 64 AS rem FROM h
-    ), cells AS (
-      SELECT bucket,
-             MAX(CASE WHEN rem = 0 THEN 55
-                      ELSE 54 - length(bin(rem)) + 1 END) AS max_rho
-      FROM keyed GROUP BY bucket
-    ), agg AS (
-      SELECT SUM(power(2.0, -max_rho)) AS z, COUNT(*) AS nb FROM cells
-    )
-    , r AS (
-      SELECT {0.709 * 64 * 64} / (z + CAST(64 - nb AS DOUBLE)) AS raw,
-             CAST(64 - nb AS DOUBLE) AS empty, nb
-      FROM agg
-    )
-    SELECT CAST(FLOOR(CASE WHEN raw <= {2.5 * 64} AND empty > 0
-                           THEN CAST(64 AS DOUBLE) * ln(CAST(64 AS DOUBLE) / empty)
-                           ELSE raw END * 1000000 + 0.5) AS BIGINT) AS est_micros,
-           CAST(FLOOR(raw * 1000000 + 0.5) AS BIGINT) AS raw_micros,
-           CAST(64 - nb AS BIGINT) AS n_empty,
-           (SELECT COUNT(DISTINCT user_id) FROM events) AS exact_distinct
-    FROM r
-    """,
-)
-def q_hll_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from frames_spark.operators.sketches import hll_cells, hll_estimate
-
-    ev = load_table(spark, sf_dir, "events")
-    est = hll_estimate(hll_cells(ev, "user_id"))
-    exact = ev.agg(F.countDistinct("user_id").alias("exact_distinct"))
-    return est.crossJoin(F.broadcast(exact))
 
 
 # ---------------------------------------------------------------------------

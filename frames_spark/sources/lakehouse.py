@@ -19,10 +19,10 @@ table-level. This module is the 1:1 mapping onto that world:
   vacuum              vacuum                 VACUUM / expire_snapshots
   ==================  =====================  ============================
 
-Availability follows the sources/avro.py registry-probe pattern:
-probe the SAME registry Spark consults for ``format("delta")`` /
-``format("iceberg")`` once, then raise an actionable deploy hint at
-the call site instead of Spark's generic ClassNotFound. Neither
+Availability is a registry probe: probe the SAME registry Spark
+consults for ``format("delta")`` / ``format("iceberg")`` once, then
+raise an actionable deploy hint at the call site instead of Spark's
+generic ClassNotFound. Neither
 package ships in this container, so the Spark-touching paths are
 exercised by skip-with-reason tests (the transformWithState
 pattern); the SQL builders are pure functions and fully tested.
@@ -79,10 +79,10 @@ _IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*(\.[A-Za-z_][A-Za-z0-9_]*)*$")
 
 def format_available(fmt: str) -> bool:
     """True when ``format(fmt)`` would resolve — the registry Spark
-    itself consults (sources/avro.py pattern: a bare Class.forName is
-    too loose). Deliberately uncached: availability is a property of
-    the ACTIVE session (jars/extensions can differ between sessions in
-    one process), and the lookupDataSource probe is cheap."""
+    itself consults (a bare Class.forName is too loose). Deliberately
+    uncached: availability is a property of the ACTIVE session
+    (jars/extensions can differ between sessions in one process), and
+    the lookupDataSource probe is cheap."""
     spark = SparkSession.getActiveSession()
     if spark is None:
         raise RuntimeError(f"no active SparkSession to probe for {fmt}")

@@ -5,10 +5,10 @@ WARC shards (ISO 28500): a stream of records, each a version line
 (``WARC/1.0``), a header block, a blank line, then exactly
 ``Content-Length`` payload bytes. WET files are the same container
 holding pre-extracted ``conversion`` records. Spark has no built-in
-reader; this source follows the repo's Python DataSource pattern
-(sources/fixedwidth.py): the driver only LISTS the directory, one
-task per shard, executors parse their own files with stdlib code —
-no driver-side materialization, no external warc library.
+reader; this source is a Python DataSource: the driver only LISTS
+the directory, one task per shard, executors parse their own files
+with stdlib code — no driver-side materialization, no external warc
+library.
 
 ``.warc.gz`` shards are read transparently: the standard layout
 gzips each record as its own member, and Python's gzip module

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from frames_spark.dedup import embedding, exact, jaccard, minhash, simhash
-from frames_spark.queries import (
+from frames_spark.queries.q01_core_ops import (
     _with_exact_copies,
     _with_near_copies,
     _with_perturbed_copies,

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from frames_spark.dedup.index import probe_and_append, read_index
 from frames_spark.dedup.minhash import lsh_candidate_pairs, minhash_signatures
-from frames_spark.queries import _with_near_copies
+from frames_spark.queries.q01_core_ops import _with_near_copies
 from frames_spark.sources.tables import load_table
 
 

@@ -85,7 +85,8 @@ def test_driver_window_composition_is_pinned():
     assert got == DRIVER_WINDOW, (
         "the driver's first-50 value-check window changed — if this "
         "displacement is deliberate, update DRIVER_WINDOW; otherwise "
-        "register the new query later in frames_spark/queries.py"
+        "register the new query further down frames_spark/queries/ "
+        "(module order q01..q09, then source order)"
     )
 
 

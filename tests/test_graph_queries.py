@@ -9,7 +9,8 @@ from itertools import combinations
 
 from pyspark.sql import functions as F
 
-from frames_spark.queries import _LP_MAX_DEG, QUERIES
+from frames_spark.queries import QUERIES
+from frames_spark.queries.q07_corpus_gates import _LP_MAX_DEG
 
 
 def _edges_from_lineitem(spark, sf_dir):

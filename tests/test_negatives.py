@@ -235,10 +235,10 @@ def test_gov_oracle_cte_matches_suggest_num_planes():
     import pytest
 
     from frames_spark.dedup.embedding import suggest_num_planes
-    from frames_spark.queries.q01_core_ops import _gov_np_sql
-    from frames_spark.queries.q09_privacy import (
+    from frames_spark.queries.q01_core_ops import (
         _HN_MAXB,
         _HN_ORACLE_MAX_PLANES,
+        _gov_np_sql,
     )
 
     con = duckdb.connect()

@@ -47,7 +47,7 @@ def test_cc_dedup_drops_superset_of_greedy(spark, sf_dir):
     pair-drop survivors: greedy spares members that never appear as
     a pair's higher id; components collapse whole chains."""
     from frames_spark.pipelines.pretrain import clean_corpus, clean_corpus_cc
-    from frames_spark.queries import _with_near_copies
+    from frames_spark.queries.q01_core_ops import _with_near_copies
 
     docs = _with_near_copies(load_table(spark, sf_dir, "documents"))
     greedy = {r.doc_id for r in clean_corpus(docs).collect()}

@@ -56,42 +56,6 @@ def test_q6_pushdown(spark, sf_dir):
     assert "l_shipdate" in plan.split("PushedFilters")[1][:400]
 
 
-# Runtime bloom-filter join pruning: with a selective dim over a
-# shuffle join, Catalyst must inject a might_contain predicate on the
-# FACT side — at 100 TB that's the difference between shuffling the
-# table and shuffling the 2% that can match. Thresholds lowered to
-# demonstrate on test-scale data; production keeps the defaults.
-def test_runtime_bloom_filter_injection(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from frames_spark.plans.runtime_filters import runtime_bloom_filters
-    from frames_spark.sources.tables import load_table
-
-    prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        with runtime_bloom_filters(spark, application_side_threshold="0"):
-            li = load_table(spark, sf_dir, "lineitem")
-            o = load_table(spark, sf_dir, "orders").filter(
-                F.col("o_orderpriority") == "1-URGENT"
-            )
-            j = li.join(o, F.col("l_orderkey") == F.col("o_orderkey")).select(
-                "l_orderkey", "l_quantity", "o_totalprice"
-            )
-            plan = j._jdf.queryExecution().executedPlan().toString()
-            assert "might_contain" in plan, "no runtime bloom filter injected"
-            assert "bloom_filter_agg" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
-    # and the conf restore happened
-    assert (
-        spark.conf.get(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
-        )
-        != "0"
-    )
-
-
 # q_boilerplate must count span frequency with a map-side-combining
 # groupBy, never a `count() over (partition by span)` window — a hot
 # span (crawl-wide footer in 1e8 docs) lands entirely on one reducer

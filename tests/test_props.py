@@ -305,7 +305,7 @@ def test_incremental_probe_partition_invariance(
         lsh_candidate_pairs,
         minhash_signatures,
     )
-    from frames_spark.queries import _with_near_copies
+    from frames_spark.queries.q01_core_ops import _with_near_copies
     from frames_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents").limit(24)

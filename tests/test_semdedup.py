@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from frames_spark.dedup import semdedup
-from frames_spark.queries import _with_perturbed_copies
+from frames_spark.queries.q01_core_ops import _with_perturbed_copies
 from frames_spark.sources.tables import load_table
 
 

@@ -69,7 +69,7 @@ def test_near_dup_pairs_stream_matches_batch(spark, sf_dir, tmp_path):
     import pyspark.sql.functions as F
 
     from frames_spark.dedup import minhash as mh
-    from frames_spark.queries import _with_near_copies
+    from frames_spark.queries.q01_core_ops import _with_near_copies
     from frames_spark.sources.tables import load_table
     from frames_spark.streaming.corpus import near_dup_pairs_stream
 

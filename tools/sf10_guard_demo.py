@@ -9,7 +9,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from frames_spark.dedup import jaccard
-from frames_spark.queries import _with_near_copies
+from frames_spark.queries.q01_core_ops import _with_near_copies
 from frames_spark.session import get_spark
 from frames_spark.sources.tables import load_table
 

@@ -39,7 +39,7 @@ def cosine_pairs(
     df: DataFrame, id_col: str, vec_col: str, threshold: float
 ) -> DataFrame:
     """All pairs with cosine >= threshold (exact; small scale / within
-    buckets only — see sign_buckets for the 100 TB path)."""
+    buckets only — see fixed_with_buckets for the 100 TB path)."""
     a = _fixed(df, id_col, vec_col).select(
         F.col("vid").alias("id_a"), F.col("fvec").alias("va"), F.col("n2").alias("na2")
     )
@@ -172,15 +172,6 @@ def fixed_with_buckets(
     the fixed-point representation per side."""
     return _fixed(df, id_col, vec_col).withColumn(
         "bucket", _bucket_expr(num_planes, dim)
-    )
-
-
-def sign_buckets(
-    df: DataFrame, id_col: str, vec_col: str, num_planes: int = 8, dim: int = 64
-) -> DataFrame:
-    """(id, bucket) — random-hyperplane signature bucket per vector."""
-    return fixed_with_buckets(df, id_col, vec_col, num_planes, dim).select(
-        "vid", "bucket"
     )
 
 

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from frames_spark.dedup.minhash import banded_signatures, minhash_signatures
+from frames_spark.sources.sink import write_increment
 from frames_spark.sources.versioned import (
     read_versioned,
     upsert_versioned,
@@ -72,13 +73,10 @@ def band_rows(
     num_hashes: int = 8,
     bands: int = 4,
     rows_per_band: int = 2,
-    fast: bool = False,
 ) -> DataFrame:
     """(doc, band, band_key) — the storable banded-signature rows of a
     batch (bands * rows_per_band must equal num_hashes)."""
-    sigs = minhash_signatures(
-        df, id_col, text_col, n=n, num_hashes=num_hashes, fast=fast
-    )
+    sigs = minhash_signatures(df, id_col, text_col, n=n, num_hashes=num_hashes)
     return banded_signatures(sigs, bands, rows_per_band)
 
 
@@ -101,7 +99,6 @@ def probe_and_append(
     bands: int = 4,
     rows_per_band: int = 2,
     max_bucket: int | None = None,
-    fast: bool = False,
 ) -> tuple[DataFrame, int]:
     """Dedup one arriving batch against the persisted index.
 
@@ -132,7 +129,6 @@ def probe_and_append(
         num_hashes=num_hashes,
         bands=bands,
         rows_per_band=rows_per_band,
-        fast=fast,
     ).persist()
     from frames_spark.operators.caching import tie_cache
 
@@ -217,7 +213,6 @@ def probe_increment(
     bands: int = 4,
     rows_per_band: int = 2,
     max_bucket: int | None = None,
-    fast: bool = False,
 ) -> DataFrame:
     """O(batch) probe+append against the increment-layout index:
     returns the batch's candidate pairs and lands its band rows under
@@ -247,7 +242,6 @@ def probe_increment(
         num_hashes=num_hashes,
         bands=bands,
         rows_per_band=rows_per_band,
-        fast=fast,
     ).persist()
     old = _read_increments(spark, index_dir)
     if old is not None:
@@ -391,13 +385,7 @@ def foreach_batch_probe(
         pairs, _ = probe_and_append(
             batch.sparkSession, index_dir, batch, id_col, text_col, **params
         )
-        (
-            pairs.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(pairs_dir)
-        )
+        write_increment(pairs, pairs_dir, batch_id)
 
     return body
 

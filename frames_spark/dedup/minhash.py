@@ -10,8 +10,7 @@ huge (md5 of r concatenated 60-bit values), so bucket skew is
 negligible; the shuffle is keyed by band hash.
 
 Hashes are the portable md5-based ``hash60`` (SURVEY.md §4) so the
-DuckDB oracle reproduces signatures bit-for-bit; flip ``fast=True``
-for xxhash64 in engine-internal runs.
+DuckDB oracle reproduces signatures bit-for-bit.
 """
 
 from __future__ import annotations
@@ -46,18 +45,17 @@ def minhash_signatures(
     text_col: str,
     n: int = 3,
     num_hashes: int = 16,
-    fast: bool = False,
 ) -> DataFrame:
     """(doc, sig_0 .. sig_{k-1}) — WIDE form: the k min-aggregates run
     in one partial-aggregated shuffle over the shingle index; no k-way
     row explosion (the long-form version shuffled k x the index)."""
     return minhash_signatures_from_index(
-        shingle_index(df, id_col, text_col, n), num_hashes=num_hashes, fast=fast
+        shingle_index(df, id_col, text_col, n), num_hashes=num_hashes
     )
 
 
 def minhash_signatures_from_index(
-    index: DataFrame, num_hashes: int = 16, fast: bool = False
+    index: DataFrame, num_hashes: int = 16
 ) -> DataFrame:
     """Signatures from a pre-built (doc, shingle) inverted index —
     lets one index relation feed several dedup tiers (e.g. the
@@ -66,7 +64,7 @@ def minhash_signatures_from_index(
     from frames_spark.functions.exprcache import memo_col
 
     index = index.withColumn(
-        "base", hash60(F.col("shingle"), seed="mh", fast=fast) % MINHASH_P
+        "base", hash60(F.col("shingle"), seed="mh") % MINHASH_P
     )
 
     def _sig_cols() -> list:

@@ -1,12 +1,10 @@
-"""SimHash fingerprints + Hamming-band near-dup candidates.
+"""SimHash fingerprints.
 
 60-bit SimHash (fits signed BIGINT in every engine): each shingle
 hashes to 60 bits via the portable md5-based hash60; every bit votes
 +1/-1 weighted by presence; the fingerprint sets bit b where the vote
-is positive. Near-dups are found by splitting the fingerprint into
-``bands`` bit-blocks and equi-joining on (band, block value) — the
-standard Hamming-distance LSH: dups within ``bands-1`` differing bits
-are guaranteed to collide in at least one band.
+is positive. Near-duplicates differ in few bits: the Hamming distance
+of two fingerprints is bit_count(a XOR b).
 
 Bit votes are 60 wide sum-aggregates over the shingle index — ONE
 shuffle of the index rows (the exploded bit formulation shuffled 60
@@ -25,20 +23,18 @@ SIMHASH_BITS = 60
 
 
 def simhash(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, fast: bool = False
+    df: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:
     """(doc, simhash) 60-bit fingerprint per document."""
-    return simhash_from_index(shingle_index(df, id_col, text_col, n), fast=fast)
+    return simhash_from_index(shingle_index(df, id_col, text_col, n))
 
 
-def simhash_from_index(index: DataFrame, fast: bool = False) -> DataFrame:
+def simhash_from_index(index: DataFrame) -> DataFrame:
     """Fingerprints from a pre-built (doc, shingle) inverted index —
     lets one (persisted) index relation feed SimHash alongside the
     Jaccard/containment tiers instead of re-shingling the corpus per
     tier (the minhash_signatures_from_index pattern)."""
-    index = index.withColumn(
-        "h", hash60(F.col("shingle"), seed="sh", fast=fast)
-    )
+    index = index.withColumn("h", hash60(F.col("shingle"), seed="sh"))
     # One parsed SQL expression for all 60 bit votes + the bit
     # assembly: the per-bit F.sum/F.when construction was ~360 py4j
     # round-trips of driver time per build (the const_int_matrix
@@ -51,34 +47,4 @@ def simhash_from_index(index: DataFrame, fast: bool = False) -> DataFrame:
     )
     return index.groupBy("doc").agg(
         F.expr(f"CAST({sig} AS BIGINT)").alias("simhash")
-    )
-
-
-def hamming_candidates(fingerprints: DataFrame, bands: int = 4) -> DataFrame:
-    """Candidate pairs whose fingerprints collide in >= 1 bit-band."""
-    width = SIMHASH_BITS // bands
-    mask = (1 << width) - 1
-    banded = fingerprints.select(
-        "doc",
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
-        F.shiftright(F.col("simhash"), F.col("band") * width)
-        .bitwiseAND(F.lit(mask))
-        .alias("block"),
-    )
-    # bucket groupBy + in-array pair expansion (see minhash.py) —
-    # fingerprint lineage computes once, one shuffle on (band, block)
-    buckets = (
-        banded.groupBy("band", "block")
-        .agg(F.sort_array(F.collect_list("doc")).alias("ds"))
-        .filter(F.size("ds") >= 2)
-    )
-    pair_expr = F.expr(
-        "flatten(transform(ds, (x, i) ->"
-        " transform(slice(ds, i + 2, size(ds)),"
-        " y -> struct(x AS doc_a, y AS doc_b))))"
-    )
-    return (
-        buckets.select(F.explode(pair_expr).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
     )

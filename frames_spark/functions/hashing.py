@@ -2,9 +2,7 @@
 
 Everything that feeds a cross-engine comparison (or must be stable
 across releases/cluster versions) hashes with md5 — identical output
-in Spark, DuckDB, and any other engine. Perf-critical internal paths
-that never leave Spark may use xxhash64 instead (one JVM hash vs
-md5's crypto cost); `fast=True` flags those.
+in Spark, DuckDB, and any other engine.
 
 Scheme: hash64(s, seed) = int(md5(seed || '#' || s)[:15], 16) — 60
 bits, always positive, fits BIGINT in every engine.
@@ -17,19 +15,14 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def hash60(col: Column, seed: int | str = 0, fast: bool = False) -> Column:
+def hash60(col: Column, seed: int | str = 0) -> Column:
     """Seeded 60-bit positive hash of a string column."""
-    if fast:
-        # xxhash64 is ~10x cheaper but NOT portable across engines;
-        # mask the sign bit so downstream band math matches hash60's
-        # positivity contract.
-        return F.abs(F.xxhash64(F.lit(str(seed)), col))
     hexpart = F.substring(F.md5(F.concat(F.lit(f"{seed}#"), col)), 1, 15)
     return F.conv(hexpart, 16, 10).cast("long")
 
 
 def hash60_sql(expr: str, seed: int | str = 0) -> str:
-    """DuckDB twin of ``hash60(..., fast=False)``."""
+    """DuckDB twin of ``hash60``."""
     return f"CAST('0x' || substr(md5(concat('{seed}#', {expr})), 1, 15) AS BIGINT)"
 
 

@@ -53,26 +53,6 @@ def _argmax_counts(acc: Column) -> Column:
     )
 
 
-def _fold_counts(tokens_col: Column) -> Column:
-    """array<long> of per-language marker counts in ONE pass over the
-    token array (one 5-branch membership test per token)."""
-    zero = F.lit(0).cast("long")
-    one = F.lit(1).cast("long")
-
-    def merge(acc: Column, t: Column) -> Column:
-        return F.array(
-            *[
-                acc[i]
-                + F.when(t.isin(LANG_STOPWORDS[lang]), one).otherwise(zero)
-                for i, lang in enumerate(LANGS)
-            ]
-        )
-
-    return F.aggregate(
-        tokens_col, F.array(*[zero for _ in LANGS]), merge
-    )
-
-
 def predicted_lang_from_tokens(tokens_col: Column) -> Column:
     """Argmax language over a pre-tokenized array — use when the
     caller already carries the token array (the tokenizer then runs

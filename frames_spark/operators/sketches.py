@@ -23,6 +23,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from frames_spark.sources.sink import write_increment
+
 
 def sketch_parts(
     df: DataFrame,
@@ -227,16 +229,7 @@ def append_cms_increment(
     the partition column — the stored sketch answers any frequency
     probe without re-scanning history."""
     parts = count_min_build(batch, key_col, depth=depth, width=width)
-    if batch_id is None:
-        parts.write.mode("append").parquet(path)
-        return
-    (
-        parts.withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
-    )
+    write_increment(parts, path, batch_id)
 
 
 def read_cms(spark, path: str) -> DataFrame:
@@ -524,16 +517,7 @@ def append_hll_increment(
     the partition overwrite carries the whole exactly-once
     contract."""
     cells = hll_cells(batch, key_col, seed=seed)
-    if batch_id is None:
-        cells.write.mode("append").parquet(path)
-        return
-    (
-        cells.withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
-    )
+    write_increment(cells, path, batch_id)
 
 
 def read_hll(spark, path: str) -> DataFrame:
@@ -559,16 +543,7 @@ def append_kmv_increment(
     idempotent under duplicate cells, and the partition overwrite
     replaces a replayed epoch's parts outright."""
     cells = kmv_sketch(batch, key_col, k=k, seed=seed)
-    if batch_id is None:
-        cells.write.mode("append").parquet(path)
-        return
-    (
-        cells.withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
-    )
+    write_increment(cells, path, batch_id)
 
 
 def read_kmv(spark, path: str, k: int = KMV_K) -> DataFrame:
@@ -651,16 +626,7 @@ def append_ams_increment(
     per replicate; signs are linear, so the merged store IS the
     sketch of the concatenated stream."""
     parts = ams_sketch(batch, key_col, r=r)
-    if batch_id is None:
-        parts.write.mode("append").parquet(path)
-        return
-    (
-        parts.withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
-    )
+    write_increment(parts, path, batch_id)
 
 
 def read_ams(spark, path: str) -> DataFrame:

@@ -9,9 +9,9 @@ corpus/K * nprobe candidates per query instead of the whole corpus.
 
 The corpus-side candidate join is an equi-join on centroid_id;
 the only non-equi work is queries x centroids, which is O(Q*K) on
-two broadcast-size inputs. Scoring reuses the same fixed-point
-cosine as brute_force_topk, so with nprobe == n_centroids the result
-is bit-identical to the exact search (recall == 1).
+two broadcast-size inputs. Scoring is ann.cosine_topk, the refine
+stage brute_force_topk ends in, so with nprobe == n_centroids the
+result is bit-identical to the exact search (recall == 1).
 
 At 100 TB the assigned corpus would be written out partitioned by
 centroid_id (sources/sink.py write_partitioned) so query-time probes
@@ -25,13 +25,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from frames_spark.dedup.embedding import _fixed
+from frames_spark.functions.vectors import dot_fixed, norm2_fixed, to_fixed
 from frames_spark.operators.core import spread
-from frames_spark.functions.vectors import (
-    cosine_from_fixed,
-    dot_fixed,
-    norm2_fixed,
-    to_fixed,
-)
+from frames_spark.similarity.ann import as_neighbor, as_query, cosine_topk
 
 
 def build_ivf(
@@ -150,39 +146,13 @@ def ivf_search(
     probes = _probe_cells(queries, centroids, id_col, vec_col, nprobe).select(
         F.col(id_col).alias("query_id"), "centroid_id"
     )
-    q = _fixed(queries, id_col, vec_col).select(
-        F.col("vid").alias("query_id"),
-        F.col("fvec").alias("qvec"),
-        F.col("n2").alias("qn2"),
-    ).join(probes, "query_id")
+    q = as_query(_fixed(queries, id_col, vec_col)).join(probes, "query_id")
     c = spread(assigned).select(
         F.col(id_col).alias("neighbor_id"),
         to_fixed(F.col(vec_col)).alias("cvec"),
         "centroid_id",
     ).withColumn("cn2", norm2_fixed(F.col("cvec")))
-    scored = (
-        c.join(F.broadcast(q), "centroid_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            cosine_from_fixed(
-                dot_fixed(F.col("qvec"), F.col("cvec")), F.col("qn2"), F.col("cn2")
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return cosine_topk(c.join(F.broadcast(q), "centroid_id"), k)
 
 
 def ivf_topk(
@@ -228,52 +198,39 @@ def ivf_topk_det(
     nprobe == n_centroids degenerates to exact brute force."""
     from frames_spark.dedup.semdedup import _codebook, assign_clusters
 
-    assigned = assign_clusters(corpus, id_col, vec_col, n_centroids, dim)
-    qf = _fixed(queries, id_col, vec_col)
+    assigned = as_neighbor(
+        assign_clusters(corpus, id_col, vec_col, n_centroids, dim), "cluster"
+    )
     cell_dots = F.transform(
         _codebook(n_centroids, dim),
         lambda comp: dot_fixed(F.col("fvec"), comp),
     )
-    qcells = qf.select(
-        F.col("vid").alias("query_id"),
-        F.col("fvec").alias("qvec"),
-        F.col("n2").alias("qn2"),
+    qcells = as_query(
+        _fixed(queries, id_col, vec_col),
         F.posexplode(cell_dots).alias("cluster", "cdot"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cdot").desc(), F.col("cluster").asc()
-    )
+    w = Window.partitionBy("query_id").orderBy(*probe_order_cols())
     probes = (
         qcells.withColumn("_r", F.row_number().over(w))
         .filter(F.col("_r") <= nprobe)
         .select("query_id", "qvec", "qn2", "cluster")
     )
-    scored = (
-        assigned.join(F.broadcast(probes), "cluster")
-        .filter(F.col("vid") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vid").alias("neighbor_id"),
-            cosine_from_fixed(
-                dot_fixed(F.col("qvec"), F.col("fvec")),
-                F.col("qn2"),
-                F.col("n2"),
-            ).alias("cosine"),
-        )
-    )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return cosine_topk(assigned.join(F.broadcast(probes), "cluster"), k)
+
+
+def probe_sort_key(dot, cluster):
+    """THE probe-routing rule of the ±1 md5 codebook tiers — cell dot
+    DESCENDING, cluster id ASCENDING on ties — as a Python sort key
+    for driver-side replay (pq.ivfpq_topk_det's per-cell ADC tables).
+    Kept adjacent to :func:`probe_order_cols`, the same rule as Window
+    orderBy columns, so the two execution forms cannot drift."""
+    return (-int(dot), int(cluster))
+
+
+def probe_order_cols():
+    """The probe-routing rule of :func:`probe_sort_key` as the
+    distributed Window orderBy column list (``cdot``, ``cluster``)."""
+    return [F.col("cdot").desc(), F.col("cluster").asc()]
 
 
 def save_ivf(

@@ -22,7 +22,8 @@ Division of labor mirrors ivf.py/pca.py:
   builder, so codes are bit-reproducible);
 - SEARCH broadcasts the per-query ADC tables (built driver-side in
   the same fixed point — queries are a handful) and sums m
-  element_at lookups per corpus row.
+  element_at lookups per corpus row (``_adc_shortlist``, shared by
+  every PQ search); a shortlist closes with ann.exact_rerank.
 
 Registered rows-only (iterative training); tests pin recall against
 the exact search and code layout-invariance.
@@ -36,6 +37,7 @@ from pyspark.sql import functions as F
 
 from frames_spark.functions.vectors import FIXED_POINT
 from frames_spark.operators.core import spread
+from frames_spark.similarity.ann import exact_rerank
 
 __all__ = [
     "fit_pq",
@@ -51,7 +53,9 @@ def _unit(vec) -> "F.Column":
     """L2-normalized double vector (PQ quantizes the UNIT sphere so
     its L2 distance order matches the cosine order the exact search
     ranks by; unnormalized L2 would mix magnitude into the ranking).
-    Zero vectors pass through via nullif -> NULL norm -> NULL codes.
+    A zero vector has no direction: nullif -> NULL norm -> a NULL
+    vector (not an array of NULLs), so ``isNotNull`` filters it, and
+    each of its codes is NULL.
     """
     from frames_spark.functions.binding import let
 
@@ -63,7 +67,12 @@ def _unit(vec) -> "F.Column":
             F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x)),
             F.lit(0.0),
         )
-        return let(norm, lambda nrm: F.transform(v, lambda x: x / nrm))
+        return let(
+            norm,
+            lambda nrm: F.when(
+                nrm.isNotNull(), F.transform(v, lambda x: x / nrm)
+            ),
+        )
 
     return let(vec.cast("array<double>"), with_v)
 
@@ -99,6 +108,9 @@ def fit_pq(
                 else F.col(vec_col).cast("array<double>")
             ).alias("v")
         )
+        # a zero vector normalizes to NULL (see _unit); KMeans rejects
+        # NULL features, and such rows get NULL codes anyway
+        .filter(F.col("v").isNotNull())
         .persist()
     )
     books = []
@@ -147,7 +159,6 @@ def fit_pq_det(
     m: int = 16,
     k: int = 32,
     seed: str = "pq",
-    normalize: bool = False,
     residual_cells: int | None = None,
 ) -> np.ndarray:
     """Codebooks (m, k, d/m) from DETERMINISTIC HASH-SAMPLED corpus
@@ -157,12 +168,12 @@ def fit_pq_det(
     iterations), so the codebook — and with it encoding, ADC tables,
     and the shortlist — is reproducible bit-for-bit in SQL. The
     seeded-KMeans ``fit_pq`` stays the corpus-adapted production
-    trainer. Default normalize=False: the raw fixed-point values are
+    trainer. Codewords are the raw (unnormalized) vectors: those are
     the cross-engine-exact representation (an ordered float
     normalization fold does not replay identically in set-oriented
     SQL); the exact-cosine re-rank restores cosine order, and the
     unnormalized ADC shortlist is just a looser candidate generator
-    (pinned by tests).
+    (pinned by tests). Encode with ``encode_pq(normalize=False)``.
 
     With ``residual_cells`` = n ±1 md5 cells, the SAME k hash-chosen
     rows provide the codewords, but each codeword is the row's
@@ -215,11 +226,7 @@ def fit_pq_det(
         .select(
             hash60(F.col(id_col).cast("string"), seed=seed).alias("_h"),
             F.col(id_col).alias("_id"),
-            (
-                _unit(F.col(vec_col))
-                if normalize
-                else F.col(vec_col).cast("array<double>")
-            ).alias("v"),
+            F.col(vec_col).cast("array<double>").alias("v"),
         )
         .orderBy("_h", "_id")
         .limit(k)
@@ -282,6 +289,65 @@ def _adc_table_fixed(rq: np.ndarray, qb: np.ndarray) -> list:
     return flat
 
 
+def _adc_table(vec: np.ndarray, qb: np.ndarray) -> list:
+    """:func:`_adc_table_fixed` of a double vector, quantized to the
+    fixed-point domain first."""
+    return _adc_table_fixed(np.floor(vec * FIXED_POINT + 0.5).astype(np.int64), qb)
+
+
+def _adc_shortlist(
+    codes: DataFrame,
+    tables: DataFrame,
+    on: "str | None",
+    id_col: str,
+    m: int,
+    k: int,
+    n: int,
+) -> DataFrame:
+    """(query_id, neighbor_id, approx_dist, rank): the ``n`` code rows
+    nearest each query by ADC — per code row, ``m`` element_at lookups
+    into the query's broadcast m x ``k`` table ``dtable``, summed.
+    ``tables`` joins ``codes`` on ``on`` (the probed cell for IVF-ADC,
+    so only probed cells are scanned and each candidate is scored
+    against its OWN cell's table; None pairs every table with every
+    row). Self-matches are dropped.
+
+    Zero vectors carry NULL codes (the _unit pass-through) and hence
+    NULL approx_dist; Spark ASC is NULLS FIRST, which would seat every
+    zero-vector corpus row at rank 1 of every shortlist. nulls_last
+    keeps them out unless nothing real fits."""
+    dist = F.aggregate(
+        F.expr(
+            f"zip_with(codes, sequence(0, {m - 1}), "
+            f"(c, j) -> element_at(dtable, j * {k} + c + 1))"
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
+    )
+    scored = (
+        codes.join(F.broadcast(tables), on)
+        .filter(F.col(id_col) != F.col("query_id"))
+        .select(
+            "query_id",
+            F.col(id_col).alias("neighbor_id"),
+            dist.alias("approx_dist"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.asc_nulls_last("approx_dist"), "neighbor_id"
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= n)
+        .select(
+            "query_id",
+            "neighbor_id",
+            "approx_dist",
+            F.col("rank").cast("long").alias("rank"),
+        )
+    )
+
+
 def encode_pq_residual(
     corpus: DataFrame,
     id_col: str,
@@ -310,17 +376,6 @@ def encode_pq_residual(
             F.expr(_codes_expr(books_q)).alias("codes"),
         )
     )
-
-
-def _adc_table(vec: np.ndarray, qb: np.ndarray, m: int, sub: int) -> list:
-    """Flattened m x k table of exact fixed-point squared distances
-    from ``vec``'s subvectors to every centroid."""
-    xq = np.floor(vec * FIXED_POINT + 0.5).astype(np.int64)
-    flat: list[int] = []
-    for j in range(m):
-        diff = qb[j] - xq[j * sub : (j + 1) * sub]  # (k, sub)
-        flat.extend(int(x) for x in (diff * diff).sum(axis=1))
-    return flat
 
 
 def encode_pq(
@@ -374,125 +429,23 @@ def pq_topk(
     ``normalize`` must match the flag the codes were encoded with."""
     m, kk, sub = codebooks.shape
     qb = _quantized_books(codebooks)
-    qrows = queries.select(id_col, vec_col).collect()
-    spark = codes.sparkSession
     table_rows = []
-    for r in qrows:
+    for r in queries.select(id_col, vec_col).collect():
         raw = np.array(r[vec_col], dtype=np.float64)
         if normalize:
             raw = raw / np.sqrt((raw * raw).sum())
-        table_rows.append((int(r[id_col]), _adc_table(raw, qb, m, sub)))
-    tables = spark.createDataFrame(
-        table_rows, f"query_id long, dtable array<long>"
-    )
-    dist = F.aggregate(
-        F.expr(
-            f"zip_with(codes, sequence(0, {m - 1}), "
-            f"(c, j) -> element_at(dtable, j * {kk} + c + 1))"
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    scored = (
-        codes.join(F.broadcast(tables))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            dist.alias("approx_dist"),
-        )
-    )
-    # Zero vectors carry NULL codes (documented _unit pass-through) and
-    # hence NULL approx_dist; Spark ASC is NULLS FIRST, which would
-    # seat every zero-vector corpus row at rank 1 of every shortlist.
-    # nulls_last keeps them out of the top-k unless nothing real fits.
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc_nulls_last("approx_dist"), "neighbor_id"
+        table_rows.append((int(r[id_col]), _adc_table(raw, qb)))
+    tables = codes.sparkSession.createDataFrame(
+        table_rows, "query_id long, dtable array<long>"
     )
     shortlist = rerank if (rerank and corpus is not None) else k
-    top = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= shortlist)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "approx_dist",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    top = _adc_shortlist(codes, tables, None, id_col, m, kk, shortlist)
     if shortlist == k:
         return top
-    return _exact_rerank(
+    return exact_rerank(
         top.select("query_id", "neighbor_id"), corpus, queries,
         id_col, vec_col, k,
     )
-
-
-def _exact_rerank(
-    cand: DataFrame,
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-) -> DataFrame:
-    """Exact fixed-point cosine top-k over a (query_id, neighbor_id)
-    shortlist — the closing stage shared by pq_topk, ivfpq_topk and
-    the deterministic tier."""
-    from frames_spark.dedup.embedding import _fixed
-    from frames_spark.functions.vectors import cosine_from_fixed, dot_fixed
-
-    cvec = _fixed(corpus, id_col, vec_col).select(
-        F.col("vid").alias("neighbor_id"),
-        F.col("fvec").alias("cvec"),
-        F.col("n2").alias("cn2"),
-    )
-    qvec = _fixed(queries, id_col, vec_col).select(
-        F.col("vid").alias("query_id"),
-        F.col("fvec").alias("qvec"),
-        F.col("n2").alias("qn2"),
-    )
-    exact = (
-        cand.join(cvec, "neighbor_id")
-        .join(F.broadcast(qvec), "query_id")
-        .withColumn(
-            "cosine",
-            cosine_from_fixed(
-                dot_fixed(F.col("qvec"), F.col("cvec")),
-                F.col("qn2"),
-                F.col("cn2"),
-            ),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
-
-
-def _probe_sort_key(dot, cluster):
-    """THE probe-routing rule — cell dot DESCENDING, cluster id
-    ASCENDING on ties — as a Python sort key for the driver-side
-    replay. Kept adjacent to :func:`_probe_order_cols` (the same
-    rule as Window orderBy columns) so the two execution forms
-    cannot silently drift (r11 ADVICE: the residual branch had
-    re-implemented routing inline)."""
-    return (-int(dot), int(cluster))
-
-
-def _probe_order_cols():
-    """The probe-routing rule of :func:`_probe_sort_key` as the
-    distributed Window orderBy column list."""
-    return [F.col("cdot").desc(), F.col("cluster").asc()]
 
 
 def ivfpq_topk_det(
@@ -506,160 +459,60 @@ def ivfpq_topk_det(
     m: int = 16,
     codebook_k: int = 32,
     rerank: int = 50,
-    dim: int = 64,
-    residual: bool = True,
 ) -> DataFrame:
     """IVF-ADC on the fully DETERMINISTIC index pair: ±1 md5 codebook
     cells (dedup/semdedup.py) + hash-sampled PQ codebooks, RESIDUAL-
-    encoded by default — each vector's codes describe fvec minus its
-    unit-scaled ±1 cell (exact integers, since the scaled cell
-    component round(2^20/sqrt(dim)) is itself an integer), and each
-    query carries one ADC table PER PROBED CELL built from the
-    query's residual against THAT cell. That is the production
+    encoded — each vector's codes describe fvec minus its unit-scaled
+    ±1 cell (exact integers, since the scaled cell component
+    round(2^20/sqrt(dim)) is itself an integer for power-of-4 dims),
+    and each query carries one ADC table PER PROBED CELL built from
+    the query's residual against THAT cell. That is the production
     composite's shape (ivfpq_topk: KMeans cells + float residual PQ)
     with every leg — codeword selection, cell routing, residuals,
     encoding argmin, ADC sums, shortlist — exact integer and hence
     value-oracled in SQL; the exact fixed-point cosine re-rank closes
-    it. ``residual=False`` keeps the raw-vector det tier (codes spend
-    resolution re-describing the cell; one table per query)."""
-    from frames_spark.dedup.embedding import _fixed
-    from frames_spark.dedup.semdedup import (
-        _codebook,
-        assign_clusters,
-        centroid_components,
+    it. The vector width is the codebook's (m x sub)."""
+    from frames_spark.dedup.semdedup import centroid_components
+    from frames_spark.similarity.ivf import probe_sort_key
+
+    books_q = fit_pq_det(
+        corpus, id_col, vec_col, m=m, k=codebook_k, residual_cells=n_centroids
     )
-    from frames_spark.functions.vectors import dot_fixed
-
-    spark = corpus.sparkSession
-
-    if residual:
-        books_q = fit_pq_det(
-            corpus, id_col, vec_col, m=m, k=codebook_k,
-            residual_cells=n_centroids,
+    codes = encode_pq_residual(corpus, id_col, vec_col, books_q, n_centroids)
+    mm, kk, sub = books_q.shape
+    dim = mm * sub
+    s = _cent_fixed_scale(dim)
+    signs = {
+        c: np.array(centroid_components(c, dim), dtype=np.int64)
+        for c in range(n_centroids)
+    }
+    # per-(query, probed cell) ADC table from the query's residual
+    # against THAT cell — probe routing replayed in exact integer
+    table_rows = []
+    for r in queries.select(id_col, vec_col).collect():
+        xq = np.floor(
+            np.array(r[vec_col], dtype=np.float64) * FIXED_POINT + 0.5
+        ).astype(np.int64)
+        by_dot = sorted(
+            range(n_centroids),
+            key=lambda c: probe_sort_key((xq * signs[c]).sum(), c),
         )
-        codes = encode_pq_residual(
-            corpus, id_col, vec_col, books_q, n_centroids
-        )
-        mm, kk, sub = books_q.shape
-        s = _cent_fixed_scale(dim)
-        signs = {
-            c: np.array(centroid_components(c, dim), dtype=np.int64)
-            for c in range(n_centroids)
-        }
-        # per-(query, probed cell) ADC table from the query's residual
-        # against THAT cell — probe routing replayed in exact integer
-        # (same dot-desc, cluster-asc rule as the distributed probes)
-        table_rows = []
-        for r in queries.select(id_col, vec_col).collect():
-            xq = np.floor(
-                np.array(r[vec_col], dtype=np.float64) * FIXED_POINT + 0.5
-            ).astype(np.int64)
-            by_dot = sorted(
-                range(n_centroids),
-                key=lambda c: _probe_sort_key((xq * signs[c]).sum(), c),
-            )
-            for cell in by_dot[:nprobe]:
-                rq = xq - s * signs[cell]
-                table_rows.append(
-                    (int(r[id_col]), int(cell), _adc_table_fixed(rq, books_q))
+        for cell in by_dot[:nprobe]:
+            table_rows.append(
+                (
+                    int(r[id_col]),
+                    int(cell),
+                    _adc_table_fixed(xq - s * signs[cell], books_q),
                 )
-        tables = spark.createDataFrame(
-            table_rows, "query_id long, cluster int, dtable array<long>"
-        )
-        dist = F.aggregate(
-            F.expr(
-                f"zip_with(codes, sequence(0, {mm - 1}), "
-                f"(c, j) -> element_at(dtable, j * {kk} + c + 1))"
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-        # cluster equi-join = only the probed cells are scanned, and
-        # each candidate is scored against its OWN cell's query table
-        scored = (
-            codes.join(F.broadcast(tables), "cluster")
-            .filter(F.col(id_col) != F.col("query_id"))
-            .select(
-                "query_id",
-                F.col(id_col).alias("neighbor_id"),
-                dist.alias("approx_dist"),
             )
-        )
-        ws = Window.partitionBy("query_id").orderBy(
-            F.asc_nulls_last("approx_dist"), "neighbor_id"
-        )
-        short = (
-            scored.withColumn("_r", F.row_number().over(ws))
-            .filter(F.col("_r") <= rerank)
-            .select("query_id", "neighbor_id")
-        )
-        return _exact_rerank(short, corpus, queries, id_col, vec_col, k)
-
-    # raw-vector det tier: one ADC table per query, distributed probe
-    # routing (the residual branch routes driver-side per probed cell)
-    qf = _fixed(queries, id_col, vec_col)
-    cell_dots = F.transform(
-        _codebook(n_centroids, dim),
-        lambda comp: dot_fixed(F.col("fvec"), comp),
+    tables = corpus.sparkSession.createDataFrame(
+        table_rows, "query_id long, cluster int, dtable array<long>"
     )
-    qcells = qf.select(
-        F.col("vid").alias("query_id"),
-        F.posexplode(cell_dots).alias("cluster", "cdot"),
+    short = _adc_shortlist(codes, tables, "cluster", id_col, mm, kk, rerank)
+    return exact_rerank(
+        short.select("query_id", "neighbor_id"), corpus, queries,
+        id_col, vec_col, k,
     )
-    wp = Window.partitionBy("query_id").orderBy(*_probe_order_cols())
-    probes = (
-        qcells.withColumn("_r", F.row_number().over(wp))
-        .filter(F.col("_r") <= nprobe)
-        .select("query_id", "cluster")
-    )
-
-    cells = assign_clusters(corpus, id_col, vec_col, n_centroids, dim).select(
-        F.col("vid").alias(id_col), "cluster"
-    )
-    books = fit_pq_det(corpus, id_col, vec_col, m=m, k=codebook_k)
-    codes = encode_pq(corpus, id_col, vec_col, books, normalize=False).join(
-        cells, id_col
-    )
-
-    mm, kk, sub = books.shape
-    qb = _quantized_books(books)
-    table_rows = [
-        (int(r[id_col]), _adc_table(
-            np.array(r[vec_col], dtype=np.float64), qb, mm, sub
-        ))
-        for r in queries.select(id_col, vec_col).collect()
-    ]
-    tables = spark.createDataFrame(
-        table_rows, "query_id long, dtable array<long>"
-    )
-    dist = F.aggregate(
-        F.expr(
-            f"zip_with(codes, sequence(0, {mm - 1}), "
-            f"(c, j) -> element_at(dtable, j * {kk} + c + 1))"
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    # cluster equi-join against the probe set = only probed cells scan
-    scored = (
-        codes.join(F.broadcast(probes), "cluster")
-        .join(F.broadcast(tables), "query_id")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            dist.alias("approx_dist"),
-        )
-    )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.asc_nulls_last("approx_dist"), "neighbor_id"
-    )
-    short = (
-        scored.withColumn("_r", F.row_number().over(ws))
-        .filter(F.col("_r") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_rerank(short, corpus, queries, id_col, vec_col, k)
 
 
 def save_pq(codes: DataFrame, codebooks: np.ndarray, path: str) -> None:
@@ -740,7 +593,12 @@ def ivfpq_topk(
     from frames_spark.similarity.ivf import build_ivf
 
     unit_col = "_nv"
-    ncorp = corpus.withColumn(unit_col, _unit(F.col(vec_col)))
+    # a zero vector normalizes to NULL (see _unit): it has no cosine
+    # and no cell (KMeans rejects NULL features), so it stays out of
+    # the index
+    ncorp = corpus.withColumn(unit_col, _unit(F.col(vec_col))).filter(
+        F.col(unit_col).isNotNull()
+    )
     assigned, centroids = build_ivf(
         ncorp, id_col, unit_col, n_centroids=n_centroids, seed=seed
     )
@@ -764,7 +622,6 @@ def ivfpq_topk(
     cents = {
         r["centroid_id"]: np.array(r["cvec"]) for r in centroids.collect()
     }
-    spark = corpus.sparkSession
     table_rows = []
     for r in queries.select(id_col, vec_col).collect():
         qv = np.array(r[vec_col], dtype=np.float64)
@@ -773,79 +630,14 @@ def ivfpq_topk(
             cents, key=lambda c: (float(((qv - cents[c]) ** 2).sum()), c)
         )
         for cell in by_dist[:nprobe]:
-            res = qv - cents[cell]
             table_rows.append(
-                (int(r[id_col]), int(cell), _adc_table(res, qb, mm, sub))
+                (int(r[id_col]), int(cell), _adc_table(qv - cents[cell], qb))
             )
-    tables = spark.createDataFrame(
+    tables = corpus.sparkSession.createDataFrame(
         table_rows, "query_id long, centroid_id int, dtable array<long>"
     )
-    dist = F.aggregate(
-        F.expr(
-            f"zip_with(codes, sequence(0, {mm - 1}), "
-            f"(c, j) -> element_at(dtable, j * {kk} + c + 1))"
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    # centroid_id equi-join = only the probed cells are scanned
-    scored = (
-        codes.join(F.broadcast(tables), "centroid_id")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            dist.alias("approx_dist"),
-        )
-    )
-    # NULL approx_dist (zero-vector codes) sorts last, as in pq_topk.
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc_nulls_last("approx_dist"), "neighbor_id"
-    )
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-
-    from frames_spark.dedup.embedding import _fixed
-    from frames_spark.functions.vectors import (
-        cosine_from_fixed,
-        dot_fixed,
-    )
-
-    cvec = _fixed(corpus, id_col, vec_col).select(
-        F.col("vid").alias("neighbor_id"),
-        F.col("fvec").alias("cvec2"),
-        F.col("n2").alias("cn2"),
-    )
-    qvec = _fixed(queries, id_col, vec_col).select(
-        F.col("vid").alias("query_id"),
-        F.col("fvec").alias("qvec2"),
-        F.col("n2").alias("qn2"),
-    )
-    exact = (
-        shortlist.join(cvec, "neighbor_id")
-        .join(F.broadcast(qvec), "query_id")
-        .withColumn(
-            "cosine",
-            cosine_from_fixed(
-                dot_fixed(F.col("qvec2"), F.col("cvec2")),
-                F.col("qn2"),
-                F.col("cn2"),
-            ),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("rank").cast("long").alias("rank"),
-        )
+    short = _adc_shortlist(codes, tables, "centroid_id", id_col, mm, kk, rerank)
+    return exact_rerank(
+        short.select("query_id", "neighbor_id"), corpus, queries,
+        id_col, vec_col, k,
     )

@@ -360,6 +360,30 @@ def footer_stats(
 # ---------------------------------------------------------------------------
 
 
+def write_increment(
+    parts: DataFrame, path: str, batch_id: int | None = None
+) -> None:
+    """Land one ingest batch's aggregated parts exactly once.
+
+    Without ``batch_id`` the parts are appended. With it (the
+    foreachBatch epoch) they land in a ``batch_id=`` partition under
+    dynamic overwrite, so a REPLAYED batch replaces its own prior
+    parts instead of double-counting — the exactly-once contract for
+    non-transactional sinks. Readers merge all parts and are
+    oblivious to the extra partition column. Shared by the histogram,
+    sketch (CMS/HLL/KMV/AMS) and streaming dedup-probe sinks."""
+    if batch_id is None:
+        parts.write.mode("append").parquet(path)
+        return
+    (
+        parts.withColumn("batch_id", F.lit(int(batch_id)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
+
+
 def append_histogram_increment(
     batch: DataFrame,
     path: str,
@@ -395,16 +419,7 @@ def append_histogram_increment(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.col("w.start").alias("w_start"), "bin", "cnt")
     )
-    if batch_id is None:
-        parts.write.mode("append").parquet(path)
-        return
-    (
-        parts.withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
-    )
+    write_increment(parts, path, batch_id)
 
 
 def read_quantiles(
